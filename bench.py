@@ -239,8 +239,8 @@ def _interleaved_probe(mk_engine, n_small: int, n_big: int,
                        repeats: int = 3) -> dict:
     """Shared O(delta) probe protocol (round-4 VERDICT item 1): build
     BOTH engines (small and big synthetic state) up front, warm each
-    through rounds 0-1 (round 0 pays the one-off full-bloom / first-
-    incremental build; round 1 settles JIT + AQE statistics — measured
+    through rounds 0-1 (round 0 pays the first incremental filter
+    merge; round 1 settles JIT + AQE statistics — measured
     on this box, the first post-bloom round still runs ~1.6x its
     steady-state cost), then alternate timed steady-state rounds —
     s.r2, b.r2, s.r3, b.r3, ... — so box drift lands on both sides of
@@ -280,13 +280,29 @@ def _interleaved_probe(mk_engine, n_small: int, n_big: int,
         clean_b()
 
 
+def _commit_aged_seen(cat, base: dict, seen_id: int, capacity: int,
+                      **snaps) -> None:
+    """Commit injected seen events as the bootstrap round, with the seen
+    filters rebuilt over the aged log: the engine only ever extends the
+    filters it finds, so they must cover every seen key."""
+    from web_scrapers_python_spark.operators import dedup as D
+    filters = D.build_bloom_filters(
+        cat.read("seen", seen_id).select("host_bucket", "url_hash")
+        .distinct(), capacity=capacity)
+    fid = cat.write_snapshot("seen_filters", filters,
+                             {"round": -1, "for_seen_snapshot": seen_id},
+                             shard_col="host_bucket")
+    cat.commit_round(-1, {**base, **snaps, "seen": seen_id,
+                          "seen_filters": fid})
+
+
 def run_state_probe(spark, repeats: int = 3) -> dict:
     """Round-cost-vs-crawl-age probe: the same round workload on a seen
     set of S vs 10S entries. With O(delta) state commits (seen event
     log + pending-only frontier) round wall time must stay ~flat —
     the driver's done-criterion is ratio <= 1.5. The synthetic seen
-    entries are injected as bootstrap-time insert events; round 0
-    (which pays the one-off full bloom build) is excluded; steady-state
+    entries are injected as bootstrap-time insert events (the one-off
+    full bloom build over them is paid in set-up); steady-state
     rounds are measured interleaved small/big (median of >=3 pairs)."""
     from pyspark.sql import functions as F
     from web_scrapers_python_spark.plans.engine import CrawlConfig, CrawlEngine
@@ -329,7 +345,7 @@ def run_state_probe(spark, repeats: int = 3) -> dict:
         base = cat.last_complete_round()["snapshots"]
         ss = cat.write_snapshot("seen", synth, {"round": -1},
                                 mode="append", shard_col="host_bucket")
-        cat.commit_round(-1, {**base, "seen": ss})
+        _commit_aged_seen(cat, base, ss, eng.cfg.bloom_capacity)
         return eng, lambda: shutil.rmtree(wh, ignore_errors=True)
 
     r = _interleaved_probe(mk, PROBE_SEEN_SMALL, PROBE_SEEN_SMALL * 10,
@@ -427,7 +443,7 @@ def run_pending_probe(spark, repeats: int = 3) -> dict:
         ss = cat.write_snapshot("seen", seen_ev, {"round": -1},
                                 mode="append", shard_col="host_bucket",
                                 base_snapshot_id=base["seen"])
-        cat.commit_round(-1, {**base, "frontier": fs, "seen": ss})
+        _commit_aged_seen(cat, base, ss, cfg.bloom_capacity, frontier=fs)
         return eng, lambda: shutil.rmtree(wh, ignore_errors=True)
 
     r = _interleaved_probe(mk, PROBE_PENDING_SMALL,

@@ -203,24 +203,41 @@ def test_seen_rotating_compaction_equivalence(spark, pages, policy, seeds_df,
     assert seen_g.count() == seen_g.select("url_hash").distinct().count()
 
 
+def _tear_round(cat, r):
+    """Leave round ``r`` torn the way a crash inside it would: junk data
+    dirs renamed into place for ``articles`` and ``seen`` under the
+    snapshot ids their next writes pick, but no snapshot-log entry and
+    no ``commit_round``."""
+    base = cat.last_complete_round()["snapshots"]
+    for table in ("articles", "seen"):
+        snap_id = cat.snapshots(table)[-1]["id"] + 1
+        cat.read(table, base[table]).limit(3) \
+            .withColumn("url", F.lit("https://torn.example.com/")) \
+            .withColumn("url_hash", F.lit(f"torn-round-{r}")) \
+            .write.parquet(os.path.join(cat.warehouse, table,
+                                        f"snap-{snap_id}"))
+
+
 def test_resume_from_snapshot_identity(spark, pages, policy, seeds_df,
                                        golden, tmp_path):
-    """Kill after round k, resume from the snapshot catalog → final state
-    identical to the uninterrupted run (E5)."""
+    """Kill after round k, and again inside round k+1 (orphaned data
+    dirs, no round commit); resume from the snapshot catalog → final
+    state identical to the uninterrupted run (E5)."""
     wh = tmp_path / "wh"
     cat = SnapshotCatalog(spark, str(wh))
     eng = CrawlEngine(spark, pages, policy, cat, CrawlConfig())
     eng.run(seeds_df, max_rounds=1)  # bootstrap + round 0, then 'crash'
+    _tear_round(cat, 1)              # crash inside round 1
 
     # new engine + new catalog object over the same warehouse = resume
     cat2 = SnapshotCatalog(spark, str(wh))
     eng2 = CrawlEngine(spark, pages, policy, cat2, CrawlConfig())
     metrics2 = eng2.run(seeds=None, max_rounds=30)
 
-    all_metrics = [None] * 0
     # stitch: round 0 from first run + rest from resume
     m0 = [r for r in cat2.rounds() if r["round"] == 0]
     assert m0, "round 0 must be committed before the crash"
+    assert metrics2[0]["round"] == 1
     combined = [{"round": 0}] + metrics2
     assert len(combined) == len(golden.rounds)
     _assert_state_equal(cat2, golden)

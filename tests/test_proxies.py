@@ -25,6 +25,8 @@ class TestParsePayloads:
             '{"ip":"5.6.7.8","port":8080},'          # no protocol -> http
             '{"ip":"9.9.9.9"},'                      # no port -> dropped
             '{"port":80},'                           # no ip -> dropped
+            '{"ip":"","port":80},'                   # empty ip -> dropped
+            '{"ip":"6.6.6.6","port":""},'            # empty port -> dropped
             '{"protocol":"socks4","ip":"7.7.7.7","port":"81"}]}',
         ]), id_cols=["pid"]).orderBy("pos").collect()
         assert [(r.pos, r.proxy) for r in out] == [

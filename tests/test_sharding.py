@@ -15,7 +15,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from web_scrapers_python_spark.plans.engine import CrawlConfig, CrawlEngine
+from web_scrapers_python_spark.plans.engine import (
+    CrawlConfig, CrawlEngine, round_metrics)
 from web_scrapers_python_spark.sources import datagen as G
 from web_scrapers_python_spark.sources.catalog import SnapshotCatalog
 from web_scrapers_python_spark.sources.seeds import read_seeds
@@ -110,6 +111,27 @@ class TestShardCatalog:
         with pytest.raises(ValueError, match="unsharded"):
             cat.overwrite_shards("t", delta, [1], "b")
 
+    def test_orphaned_snapshot_dir_does_not_wedge_writes(self, spark,
+                                                         tmp_path):
+        """A crash after a data dir is renamed to ``snap-<n>`` but before
+        the snapshot log is appended leaves an orphaned, non-empty dir
+        under the id the next write picks. That write must replace it,
+        and no read may see the orphan's rows."""
+        cat = SnapshotCatalog(spark, str(tmp_path))
+        df = spark.range(10).select(
+            "id", (F.col("id") % 2).cast("int").alias("b"))
+        s0 = cat.write_snapshot("t", df, shard_col="b")
+        orphan = os.path.join(str(tmp_path), "t", f"snap-{s0 + 1}")
+        spark.range(1000, 1005).select(
+            "id", F.lit(0).alias("b")).write.parquet(orphan)
+        ap = spark.createDataFrame([(42, 1)], "id long, b int")
+        s1 = cat.write_snapshot("t", ap, mode="append",
+                                base_snapshot_id=s0, shard_col="b")
+        assert s1 == s0 + 1
+        ids = sorted(r["id"] for r in cat.read("t").collect())
+        assert ids == list(range(10)) + [42]
+        assert cat.snapshot_delta_rowcount("t", s1) == 1
+
 
 @pytest.fixture(scope="module")
 def crawl_setup(spark, tmp_path_factory):
@@ -161,20 +183,46 @@ class TestFrontierDeltaCommit:
                              "across rounds — commits are full rewrites")
 
     def test_round_metrics_consistency(self, spark, crawl_setup, tmp_path):
-        """Footer-derived stats must agree with a direct recount of the
-        written state (the old collect-based path)."""
+        """The metrics a round returns are exactly ``round_metrics`` over
+        its committed record (frontier snapshot properties + footer
+        counts), for every committed round of a bloom-on crawl; the
+        footer-derived stats agree with a direct recount of the written
+        state; and no crawl writes a ``round_metrics`` table."""
         pages, policy, seeds = crawl_setup
         cat = SnapshotCatalog(spark, str(tmp_path))
-        eng = CrawlEngine(spark, pages, policy, cat, CrawlConfig())
+        eng = CrawlEngine(spark, pages, policy, cat,
+                          CrawlConfig(use_bloom=True))
         ms = eng.run(read_seeds(spark, seeds), max_rounds=4)
-        for m in ms:
-            r = m["round"]
-            entry = next(e for e in cat.rounds() if e["round"] == r)
-            arch = cat.read_snapshot_delta(
-                "frontier_archive", entry["snapshots"]["frontier_archive"])
+        by_round = {m["round"]: m for m in ms}
+        entries = [e for e in cat.rounds() if e["round"] >= 0]
+        assert [e["round"] for e in entries] == sorted(by_round)
+        for entry in entries:
+            m = by_round[entry["round"]]
+            assert round_metrics(cat, entry) == {
+                k: v for k, v in m.items()
+                if k not in ("_timings", "_collects")}
+            snaps = entry["snapshots"]
+            arch = cat.read_snapshot_delta("frontier_archive",
+                                           snaps["frontier_archive"])
             assert m["fetched"] == arch.where("state='fetched'").count()
             assert m["pending_after"] == cat.read(
-                "frontier", entry["snapshots"]["frontier"]).count()
+                "frontier", snaps["frontier"]).count()
+        assert not os.path.exists(os.path.join(str(tmp_path),
+                                               "round_metrics"))
+
+    def test_bloom_round_needs_bootstrapped_filters(self, spark,
+                                                    crawl_setup, tmp_path):
+        """The seen filters are built once, at bootstrap: a bloom round
+        over a warehouse whose base round has no ``seen_filters``
+        snapshot fails loudly instead of building them a second way."""
+        pages, policy, seeds = crawl_setup
+        cat = SnapshotCatalog(spark, str(tmp_path))
+        CrawlEngine(spark, pages, policy, cat, CrawlConfig()).bootstrap(
+            read_seeds(spark, seeds))
+        eng = CrawlEngine(spark, pages, policy, cat,
+                          CrawlConfig(use_bloom=True))
+        with pytest.raises(RuntimeError, match="seen_filters"):
+            eng.run_round(0)
 
     def test_driver_barrier_budget(self, spark, crawl_setup, tmp_path):
         """Per-round driver materializations (collect/count barriers)

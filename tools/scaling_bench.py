@@ -253,6 +253,10 @@ def main() -> None:
                           "cpu_control.py"),
              str(levels[0]), str(levels[-1])],
             capture_output=True, text=True)
+        if proc.returncode != 0 or not proc.stdout.strip():
+            raise RuntimeError(
+                f"cpu_control.py failed (exit {proc.returncode}): "
+                f"{proc.stderr.strip()[-2000:]}")
         pairs = json.loads(proc.stdout.strip().splitlines()[-1])["pairs"]
         return list(pairs.values())[0]
 

@@ -93,10 +93,6 @@ def resize_nearest(rgb: np.ndarray, width: int, height: int) -> np.ndarray:
 # WAV (RIFF/WAVE, PCM 16-bit mono)
 # ---------------------------------------------------------------------------
 
-def wav_size(n_samples: int) -> int:
-    return 44 + 2 * n_samples
-
-
 def encode_wav(samples: np.ndarray, rate: int = WAV_RATE) -> bytes:
     """1-D int16 samples -> WAV file bytes (PCM16 mono)."""
     if samples.dtype != np.int16 or samples.ndim != 1:

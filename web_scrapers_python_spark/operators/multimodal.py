@@ -259,17 +259,6 @@ def frame_sample(media: DataFrame, every_ms: int = 1000,
     return media.mapInPandas(run, schema)
 
 
-def repartition_by_bytes(media: DataFrame, target_mb: int = 128,
-                         size_col_bytes: str = "payload") -> DataFrame:
-    """Repartition a media table so each partition holds ~target_mb of
-    payload — row-count partitioning is wrong for multi-MB rows."""
-    stats = media.select(
-        F.sum(F.length(size_col_bytes)).alias("total")).collect()[0]
-    total = stats["total"] or 0
-    n_parts = max(1, int(total / (target_mb * 1024 * 1024)) + 1)
-    return media.repartition(n_parts)
-
-
 # ---------------------------------------------------------------------------
 # DuckDB oracle twin: expected features of synthesize_real_media +
 # extract_features, in closed form over media_id — the Spark side must

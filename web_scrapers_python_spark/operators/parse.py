@@ -246,14 +246,6 @@ def entities_udf(content: pd.Series) -> pd.Series:
     return pd.Series([ref.entities(c) for c in content])
 
 
-@F.pandas_udf(IntegerType())
-def python_word_count_udf(content: pd.Series) -> pd.Series:
-    """content_analyzer.py:198 with exact Python str.split semantics
-    (Unicode whitespace) — used inside the article pipeline."""
-    return pd.Series([ref.word_count(c) for c in content],
-                     dtype="int32")
-
-
 # CRITICAL plan property: the parse UDFs must be opaque to the
 # optimizer. They are pure functions, but if Catalyst treats them as
 # deterministic it will happily push a `_a.ok IS NOT NULL` filter (which

@@ -157,20 +157,6 @@ def parse_seed_line(line: str) -> dict | None:
     return None
 
 
-def parse_seeds_text(text: str) -> list[dict]:
-    """seeds.py:39-73 — strip, split lines, skip blanks/# comments,
-    per-line decode, drop invalid."""
-    seeds = []
-    for raw in text.strip().split("\n"):
-        ln = raw.strip()
-        if not ln or ln.startswith("#"):
-            continue
-        seed = parse_seed_line(ln)
-        if seed:
-            seeds.append(seed)
-    return seeds
-
-
 # --------------------------------------------------------------------------
 # Article cleaning (generic_news.py:168-240)
 # --------------------------------------------------------------------------

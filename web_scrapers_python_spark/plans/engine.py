@@ -1,21 +1,34 @@
 """The crawl engine: one DataFrame job per scheduling round, snapshot
 checkpoints between rounds (SURVEY §3.1 Spark lifecycle, §2.10 E3/E5).
 
-Per round r (all declarative; Catalyst/AQE pick physical strategies):
+``run_round`` is a short driver over five named phases that hand one
+round-state object (``_RoundState``) from phase to phase:
 
-  frontier(pending) ─ robots split (broadcast host_policy)
-      → per-host politeness top-B (salted window, W2)
-      → fetch = inner join pages ⋈ scheduled (size-gated broadcast, J4)
-      → phase split on label (E2): discover | parse
-      → discover: link expansion (E1) → first-wins (J2)
-                  → bloom + exact anti-join vs seen (J1)
-                  → deterministic seq assignment (O1)
-      → parse: parser dispatch (F9/P3) → pandas-UDF parsers (P1)
-               → AI analysis stage (P4/P5)
-      → writes: articles append, seen EVENT append (J3), pending
-                frontier SHARD-SCOPED overwrite (touched host buckets
-                only) + terminal-row archive append (sharded by state),
-                round_metrics (A1/A4) → atomic round commit (E5)
+  read state      the last complete round's pinned snapshot ids, the
+                  pending frontier, the seen log and ``max_seq``
+  plan            frontier(pending) ─ robots split (broadcast host_policy)
+                  → per-host politeness top-B (salted window, W2)
+                  → fetch = inner join pages ⋈ scheduled (size-gated
+                    broadcast, J4)
+                  → phase split on label (E2): discover | parse
+                  → discover: link expansion (E1) → first-wins (J2)
+                              → bloom + exact anti-join vs seen (J1)
+                              → deterministic seq assignment (O1)
+                  → parse: parser dispatch (F9/P3) → pandas-UDF parsers
+                           (P1) → AI analysis stage (P4/P5)
+                  → frontier state transitions + seen events (J3)
+  write articles  the round's big parse job, alone
+  write parallel  weibo, quarantine, frontier (SHARD-SCOPED overwrite of
+                  the touched host buckets) + terminal-row archive,
+                  content_history then seen (+ seen_filters), from a
+                  thread pool
+  commit          atomic round commit (E5), then the round's metrics
+
+Metrics are not a table. The plan-time counts (scheduled, robots
+blocked, links discovered/enqueued, recrawl enqueued) are properties of
+the round's frontier snapshot, next to ``max_seq``; ``round_metrics``
+rebuilds the full record (A1/A4) from them plus parquet-footer counts
+of the round's written deltas, for any committed round.
 
 State layout is O(delta)-per-round by construction:
 
@@ -34,6 +47,10 @@ State layout is O(delta)-per-round by construction:
   (fetched / failed / robots_blocked) move to the append-only
   ``frontier_archive``, sharded by state so per-state round stats are
   parquet-footer reads, not jobs.
+- ``seen_filters`` (with ``use_bloom``) is built once, by ``bootstrap``,
+  from the seeds' seen events; every round extends its base snapshot
+  with the round's inserts, shard-scoped to the buckets that received
+  them.
 
 On Iceberg these map to: seen = append snapshots + a MERGE-on-read
 view + partition-filtered rewrite_data_files compaction (rotating
@@ -47,9 +64,11 @@ The reference's orchestrator (orchestrator.py:419-497) collapses into
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import time
+from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup as D
@@ -66,14 +85,9 @@ FRONTIER_COLS = [
     "retry_count",
 ]
 
-SEEN_SCHEMA = ("url_hash string, url string, host_bucket int, "
-               "first_round int, last_round int, scrape_count int, "
-               "last_scrape_round int, last_dup_round int, "
-               "last_fail_round int, status string")
 SEEN_COLS = ["url_hash", "url", "host_bucket", "first_round",
              "last_round", "scrape_count", "last_scrape_round",
              "last_dup_round", "last_fail_round", "status"]
-
 
 def merged_seen(events: DataFrame) -> DataFrame:
     """Latest-state view over the seen event log — exactly the
@@ -119,6 +133,69 @@ def merged_seen(events: DataFrame) -> DataFrame:
             .otherwise(F.lit("pending")))
         .select(*SEEN_COLS)
     )
+
+
+def _round_if(flag: bool, rnd: int) -> Column:
+    return F.lit(rnd if flag else None).cast("int")
+
+
+def _seen_events(df: DataFrame, status: str, rnd: int) -> DataFrame:
+    """One seen event per row of ``df`` (url_hash, url, host_bucket) —
+    the J3 MERGE as an append. ``status`` names the event kind:
+    'pending' is an insert at enqueue round ``rnd`` (first_round =
+    last_round = rnd); 'scraped', 'failed' and 'duplicate' are fetch,
+    retry-exhausted and content-duplicate events of round ``rnd``, each
+    stamping its own ``last_*_round`` column. A fetch event alone
+    counts a scrape."""
+    return df.select(
+        "url_hash", "url", "host_bucket",
+        _round_if(status == "pending", rnd).alias("first_round"),
+        F.lit(rnd).cast("int").alias("last_round"),
+        F.lit(int(status == "scraped")).alias("scrape_count"),
+        _round_if(status == "scraped", rnd).alias("last_scrape_round"),
+        _round_if(status == "duplicate", rnd).alias("last_dup_round"),
+        _round_if(status == "failed", rnd).alias("last_fail_round"),
+        F.lit(status).alias("status"),
+    )
+
+
+def _is_parse() -> Column:
+    return F.col("label") == "PARSE"
+
+
+def _is_discover() -> Column:
+    return F.col("label").isNotNull() & ~_is_parse()
+
+
+def round_metrics(catalog: SnapshotCatalog, round_entry: dict) -> dict:
+    """A1/A4 metrics of one committed round (an entry of
+    ``catalog.rounds()``, round >= 0). The plan-time counts come from
+    the round's frontier snapshot properties; every other count is a
+    parquet-footer read of a delta the round wrote (driver-side, no
+    Spark job), so the cost stays flat as the crawl ages. The
+    state-sharded archive gives per-state counts from its leaf dirs."""
+    snaps = round_entry["snapshots"]
+    plan = catalog.snapshot_properties("frontier", snaps["frontier"])
+    n_fetched = catalog.snapshot_delta_rowcount(
+        "frontier_archive", snaps["frontier_archive"], shards=["fetched"])
+    return {
+        "round": round_entry["round"],
+        "scheduled": plan["scheduled"],
+        "fetched": n_fetched,
+        "fetch_failed": plan["scheduled"] - n_fetched,
+        "robots_blocked": plan["robots_blocked"],
+        "articles_scraped": catalog.snapshot_delta_rowcount(
+            "articles", snaps["articles"]),
+        "errors": catalog.snapshot_delta_rowcount(
+            "quarantine", snaps["quarantine"]),
+        "links_discovered": plan["links_discovered"],
+        "links_enqueued": plan["links_enqueued"],
+        "duplicates_skipped": plan["links_discovered"]
+        - plan["links_enqueued"],
+        "recrawl_enqueued": plan["recrawl_enqueued"],
+        "pending_after": catalog.snapshot_rowcount("frontier",
+                                                   snaps["frontier"]),
+    }
 
 
 def read_frontier_full(catalog: SnapshotCatalog,
@@ -183,6 +260,41 @@ class CrawlConfig:
         return [F.col("seq").asc()]
 
 
+@dataclass
+class _RoundState:
+    """What one round's phases hand each other. ``read state`` fills
+    the inputs, ``plan`` the lazily-planned round-delta frames and the
+    plan-time counts, the write phases ``snaps``, ``commit`` the
+    metrics."""
+    r: int
+    bs: dict[str, int] | None = None   # base (last complete) round's ids
+    frontier: DataFrame | None = None  # pending rows (+ recrawl cohort)
+    seen: DataFrame | None = None      # seen event log
+    max_seq: int = 0
+    touched: set[int] = field(default_factory=set)  # host buckets rewritten
+    counts: dict[str, int] = field(default_factory=dict)  # plan-time counts
+    cached: list[DataFrame] = field(default_factory=list)
+    snaps: dict[str, int] = field(default_factory=dict)
+    # round-delta frames, set by the plan phase
+    scheduled: DataFrame | None = None
+    parse_fetched: DataFrame | None = None   # fetched PARSE-labeled rows
+    articles: DataFrame | None = None
+    weibo_posts: DataFrame | None = None
+    pending_delta: DataFrame | None = None
+    archive_delta: DataFrame | None = None
+    seen_delta: DataFrame | None = None      # fetch + insert + fail events
+    fresh: DataFrame | None = None           # fresh discoveries (inserts)
+    child_buckets: set[int] = field(default_factory=set)  # of all children
+    filters: DataFrame | None = None         # base seen_filters (bloom)
+    metrics: dict | None = None
+
+    def cache(self, df: DataFrame) -> DataFrame:
+        """Cache a round-delta frame until the round commits."""
+        df = df.cache()
+        self.cached.append(df)
+        return df
+
+
 class CrawlEngine:
     def __init__(self, spark: SparkSession, pages: DataFrame,
                  host_policy: DataFrame, catalog: SnapshotCatalog,
@@ -213,7 +325,9 @@ class CrawlEngine:
     def bootstrap(self, seeds: DataFrame) -> None:
         """seeds: (url, label, parser, priority, seq) in file order.
         Seeds enter the frontier at depth 0 and the seen set at enqueue
-        time (crawlee uniqueKey semantics, J2)."""
+        time (crawlee uniqueKey semantics, J2). With ``use_bloom`` the
+        seen filters are built here, once, from the seeds' seen events;
+        rounds only extend them."""
         f = (
             L.with_url_identity(seeds, self.cfg.n_buckets)
             .withColumn("depth", F.lit(0))
@@ -241,129 +355,143 @@ class CrawlEngine:
         props["max_seq"] = int(max_seq)
         self.catalog.set_snapshot_properties("frontier", fs, props)
         empty_archive = self.spark.createDataFrame([], written.schema)
-        ars = self.catalog.write_snapshot("frontier_archive", empty_archive,
-                                          {"round": -1}, shard_col="state")
+        snaps = {"frontier": fs}
+        snaps["frontier_archive"] = self.catalog.write_snapshot(
+            "frontier_archive", empty_archive, {"round": -1},
+            shard_col="state")
         # derive seen insert events from the *written* frontier snapshot —
         # the seeds decode/identity/dedup chain runs once, not once per
         # write
-        seen = written.select(
-            "url_hash", "url", "host_bucket",
-            F.lit(0).alias("first_round"), F.lit(0).alias("last_round"),
-            F.lit(0).alias("scrape_count"),
-            F.lit(None).cast("int").alias("last_scrape_round"),
-            F.lit(None).cast("int").alias("last_dup_round"),
-            F.lit(None).cast("int").alias("last_fail_round"),
-            F.lit("pending").alias("status"),
-        )
-        ss = self.catalog.write_snapshot("seen", seen, {"round": -1},
-                                         shard_col="host_bucket")
-        self.catalog.commit_round(-1, {"frontier": fs,
-                                       "frontier_archive": ars, "seen": ss})
+        seen = _seen_events(written, "pending", 0)
+        snaps["seen"] = self.catalog.write_snapshot(
+            "seen", seen, {"round": -1}, shard_col="host_bucket")
+        if self.cfg.use_bloom:
+            filters = D.build_bloom_filters(
+                seen.select("host_bucket", "url_hash"),
+                capacity=self.cfg.bloom_capacity)
+            snaps["seen_filters"] = self.catalog.write_snapshot(
+                "seen_filters", filters,
+                {"round": -1, "for_seen_snapshot": snaps["seen"]},
+                shard_col="host_bucket")
+        self.catalog.commit_round(-1, snaps)
 
     # -- one round -------------------------------------------------------------
     def run_round(self, r: int) -> dict:
-        import time as _time
-        _t0 = _time.time()
-        _tm: dict[str, float] = {}
-
-        def _mark(key: str) -> None:
-            nonlocal _t0
-            now = _time.time()
-            _tm[key] = round(now - _t0, 3)
-            _t0 = now
-
-        cfg = self.cfg
+        """One scheduling round: five phases over one ``_RoundState``.
+        Returns ``round_metrics`` of the committed round plus each
+        phase's wall time (``_timings``; back to back, so they sum to
+        the round's wall) and the driver barriers (``_collects``)."""
         self.last_round_collects = 0
-        # the set of host buckets this round touches: scheduled rows,
-        # robots-blocked rows, recrawl cohorts, and fresh discoveries
-        # all name their buckets — the frontier commit rewrites ONLY
-        # these shards (O(round delta)); every other bucket's data dir
-        # is carried forward by reference.
-        touched_buckets: set[int] = set()
-        # E5: read EVERY state table at the last complete round's
-        # recorded snapshot ids — never the current pointers, which a
-        # torn (crashed mid-round) commit can leave mutually
-        # inconsistent. Replaying against the pinned ids also keeps
-        # appends from carrying the torn round's orphaned data dirs.
+        st = _RoundState(r)
+        timings: dict[str, float] = {}
+        t0 = time.time()
+        for key, phase in (("t_read_state", self._read_state),
+                           ("t_plan", self._plan),
+                           ("t_write_articles", self._write_articles),
+                           ("t_write_parallel", self._write_parallel),
+                           ("t_metrics", self._commit)):
+            phase(st)
+            now = time.time()
+            timings[key] = round(now - t0, 3)
+            t0 = now
+        return {**st.metrics, "_timings": timings,
+                "_collects": self.last_round_collects}
+
+    # -- phase: read state -----------------------------------------------------
+    def _read_state(self, st: _RoundState) -> None:
+        """E5: read EVERY state table at the last complete round's
+        recorded snapshot ids — never the current pointers, which a torn
+        (crashed mid-round) commit can leave mutually inconsistent.
+        Replaying against the pinned ids also keeps appends from
+        carrying the torn round's orphaned data dirs."""
         base = self.catalog.last_complete_round()
         if base is None:
             raise RuntimeError("run_round before bootstrap")
         bs = base["snapshots"]
-        frontier = self.catalog.read("frontier", bs["frontier"])  # pending
-        seen = self.catalog.read("seen", bs["seen"])              # event log
-        max_seq = self.catalog.snapshot_properties(
-            "frontier", bs["frontier"]).get("max_seq")
-        if max_seq is None:      # pre-split warehouse fallback
-            max_seq = frontier.agg(F.max("seq")).collect()[0][0] or 0
-            self.last_round_collects += 1
-        _mark("t_read_state")
+        if self.cfg.use_bloom and "seen_filters" not in bs:
+            raise RuntimeError(
+                f"use_bloom: round {base['round']} committed no "
+                "'seen_filters' snapshot; bootstrap the crawl with "
+                "use_bloom=True so the seen filters are built")
+        st.bs = bs
+        st.frontier = self.catalog.read("frontier", bs["frontier"])
+        st.seen = self.catalog.read("seen", bs["seen"])
+        st.max_seq = int(self.catalog.snapshot_properties(
+            "frontier", bs["frontier"])["max_seq"])
 
-        # refresh cohort: the rows fetched exactly ttl rounds ago,
-        # read from THAT round's archive delta dir alone (one snapshot
-        # lookup — O(cohort), no cumulative scan). They re-enter
-        # pending with their ORIGINAL seq, so FIFO order re-crawls
-        # oldest-first.
-        n_recrawl = 0
-        recrawl_cohort = None
-        if cfg.recrawl_ttl is not None:
-            due_round = r - cfg.recrawl_ttl
-            due_entry = next((e for e in self.catalog.rounds()
-                              if e["round"] == due_round
-                              and "frontier_archive" in e["snapshots"]),
-                             None)
-            if due_entry is not None and due_round >= 0:
-                cohort = (
-                    self.catalog.read_snapshot_delta(
-                        "frontier_archive",
-                        due_entry["snapshots"]["frontier_archive"])
-                    .where(F.col("state") == "fetched")
-                    .withColumn("state", F.lit("pending"))
-                    .withColumn("retry_count", F.lit(0))
-                    .select(*FRONTIER_COLS)
-                ).cache()
-                recrawl_cohort = cohort
-                crow = cohort.agg(
-                    F.count("*").alias("n"),
-                    F.collect_set("host_bucket").alias("bk")).collect()[0]
-                self.last_round_collects += 1
-                n_recrawl = int(crow["n"])
-                touched_buckets |= {int(b) for b in crow["bk"]}
-                if n_recrawl:
-                    frontier = frontier.unionByName(cohort)
+    # -- phase: plan -----------------------------------------------------------
+    def _plan(self, st: _RoundState) -> None:
+        """Schedule the batch, fetch it, plan parse and discovery, and
+        derive every round-delta frame the write phases commit. Driver
+        barriers: the recrawl cohort's count, the one planning collect
+        and the sequencer's planning jobs."""
+        self._add_recrawl_cohort(st)
+        scheduled, blocked = self._schedule(st)
+        has_discover = self._count_batch(st, scheduled, blocked)
+        fetched, missing, parse_rows, discover_rows = self._fetch(
+            st, scheduled)
+        self._parse(st, parse_rows)
+        self._discover(st, discover_rows, has_discover)
+        self._transition(st, fetched, missing, blocked)
 
-        pending = frontier
+    def _add_recrawl_cohort(self, st: _RoundState) -> None:
+        """Refresh cohort: the rows fetched exactly ttl rounds ago, read
+        from THAT round's archive delta dir alone (one snapshot lookup —
+        O(cohort), no cumulative scan). They re-enter pending with their
+        ORIGINAL seq, so FIFO order re-crawls oldest-first."""
+        st.counts["recrawl_enqueued"] = 0
+        if self.cfg.recrawl_ttl is None:
+            return
+        due_round = st.r - self.cfg.recrawl_ttl
+        due_entry = next((e for e in self.catalog.rounds()
+                          if e["round"] == due_round
+                          and "frontier_archive" in e["snapshots"]), None)
+        if due_entry is None or due_round < 0:
+            return
+        cohort = st.cache(
+            self.catalog.read_snapshot_delta(
+                "frontier_archive",
+                due_entry["snapshots"]["frontier_archive"])
+            .where(F.col("state") == "fetched")
+            .withColumn("state", F.lit("pending"))
+            .withColumn("retry_count", F.lit(0))
+            .select(*FRONTIER_COLS))
+        crow = cohort.agg(
+            F.count("*").alias("n"),
+            F.collect_set("host_bucket").alias("bk")).collect()[0]
+        self.last_round_collects += 1
+        st.counts["recrawl_enqueued"] = int(crow["n"])
+        st.touched |= {int(b) for b in crow["bk"]}
+        if crow["n"]:
+            st.frontier = st.frontier.unionByName(cohort)
+
+    def _schedule(self, st: _RoundState) -> tuple[DataFrame, DataFrame]:
+        """Robots split, then the per-host politeness top-B."""
+        cfg = self.cfg
+        pending = st.frontier
         if cfg.max_depth is not None:
             pending = pending.where(F.col("depth") <= cfg.max_depth)
-
         allowed, blocked = W.apply_robots(pending, self.host_policy)
-        blocked = blocked.cache()
         scheduled = W.schedule_per_host(
             allowed, self.host_policy, cfg.order_by(),
             cfg.default_budget, cfg.n_salts,
             max_budget=self._budget_cap(),
-        ).select(*FRONTIER_COLS).cache()
+        ).select(*FRONTIER_COLS)
+        st.scheduled = st.cache(scheduled)
+        return st.scheduled, st.cache(blocked)
 
-        # J4: pages ⋈ scheduled inner, split per phase BEFORE the join
-        # so each branch streams html straight from the pages cache into
-        # its UDF. html is NEVER cached or shuffled — caching the joined
-        # rows would double-buffer the whole fetched payload
-        # (memory-eviction thrash that also destroys core scaling); only
-        # the narrow key set materializes. Misses (scheduled URLs absent
-        # from the corpus) come from a key-level anti-join.
-        is_parse = F.col("label") == "PARSE"
-        is_discover = F.col("label").isNotNull() & ~is_parse
-        sched_parse = scheduled.where(is_parse)
-        sched_discover = scheduled.where(is_discover)
-
-        # THE round-planning job — one collect yields the broadcast-gate
-        # size, the per-phase row counts (so empty phases skip their
-        # whole plan below), the robots-blocked count, AND the touched
-        # host-bucket sets of both frames. Folding all of it into one
-        # job matters on real executors, where each driver job barrier
-        # costs ~0.3-1 s of RPC fixed cost on short rounds.
+    def _count_batch(self, st: _RoundState, scheduled: DataFrame,
+                     blocked: DataFrame) -> bool:
+        """THE round-planning job. One collect yields the broadcast-gate
+        size, the per-phase row counts (so empty phases skip their whole
+        plan), the robots-blocked count AND the touched host-bucket sets
+        of both frames. Folding all of it into one job matters on real
+        executors, where each driver job barrier costs ~0.3-1 s of RPC
+        fixed cost on short rounds. Returns whether the batch holds
+        discover-labeled rows."""
         plan_rows = (
             scheduled.select(
-                F.when(is_parse, "parse").when(is_discover, "discover")
+                F.when(_is_parse(), "parse").when(_is_discover(), "discover")
                 .otherwise("none").alias("k"), "host_bucket")
             .unionByName(
                 blocked.select(F.lit("blocked").alias("k"), "host_bucket"))
@@ -373,69 +501,82 @@ class CrawlEngine:
             .collect()
         )
         self.last_round_collects += 1
-        label_counts = {row["k"]: row["n"] for row in plan_rows
-                        if row["k"] != "blocked"}
-        n_blocked = sum(row["n"] for row in plan_rows
-                        if row["k"] == "blocked")
+        n = {row["k"]: row["n"] for row in plan_rows}
         for row in plan_rows:
-            touched_buckets |= {int(b) for b in row["bk"]}
-        n_scheduled_rows = sum(label_counts.values())
-        has_discover = label_counts.get("discover", 0) > 0
-        _bcast = (F.broadcast if n_scheduled_rows <= cfg.fetch_broadcast_rows
-                  else (lambda df: df))
+            st.touched |= {int(b) for b in row["bk"]}
+        st.counts["robots_blocked"] = n.pop("blocked", 0)
+        st.counts["scheduled"] = sum(n.values())
+        return n.get("discover", 0) > 0
 
-        page_urls = self.pages.select("url")
-        fetched = page_urls.join(
-            _bcast(scheduled.select("url", "url_hash")), "url", "inner"
-        ).select("url_hash").cache()
+    def _fetch(self, st: _RoundState,
+               scheduled: DataFrame) -> tuple[DataFrame, ...]:
+        """The J4 fetch joins. pages ⋈ scheduled is split per phase
+        BEFORE the join so each branch streams html straight from the
+        pages cache into its UDF. html is NEVER cached or shuffled —
+        caching the joined rows would double-buffer the whole fetched
+        payload (memory-eviction thrash that also destroys core
+        scaling); only the narrow key set materializes. Misses
+        (scheduled URLs absent from the corpus) come from a key-level
+        anti-join."""
+        bcast = (F.broadcast
+                 if st.counts["scheduled"] <= self.cfg.fetch_broadcast_rows
+                 else (lambda df: df))
+
+        fetched = st.cache(self.pages.select("url").join(
+            bcast(scheduled.select("url", "url_hash")), "url", "inner"
+        ).select("url_hash"))
         missing = scheduled.select("url_hash").join(
-            _bcast(fetched), "url_hash", "left_anti")
-
-        parse_rows = self.pages.select("url", "html").join(
-            _bcast(sched_parse), "url", "inner")
-        discover_rows = self.pages.select("url", "html").join(
-            _bcast(sched_discover), "url", "inner")
-        if cfg.capture_plans:
+            bcast(fetched), "url_hash", "left_anti")
+        sched_parse = scheduled.where(_is_parse())
+        st.parse_fetched = sched_parse.join(fetched, "url_hash")
+        pages_html = self.pages.select("url", "html")
+        parse_rows = pages_html.join(bcast(sched_parse), "url", "inner")
+        discover_rows = pages_html.join(
+            bcast(scheduled.where(_is_discover())), "url", "inner")
+        if self.cfg.capture_plans:
             jvm = self.spark.sparkContext._jvm
-            self.captured_plans[r] = {
+            self.captured_plans[st.r] = {
                 name: jvm.PythonSQLUtils.explainString(
                     df._jdf.queryExecution(), "formatted")
                 for name, df in (("fetched", fetched),
                                  ("parse_rows", parse_rows))}
+        return fetched, missing, parse_rows, discover_rows
 
-        # P3/P1: parser dispatch + parse. Reference routing parses only
-        # label='PARSE' rows (routes.py:61-100); label-null rows are
-        # fetched but neither discovered-from nor parsed (routes.py:33-39).
+    def _parse(self, st: _RoundState, parse_rows: DataFrame) -> None:
+        """P3/P1: parser dispatch + parse. Reference routing parses only
+        label='PARSE' rows (routes.py:61-100); label-null rows are
+        fetched but neither discovered-from nor parsed (routes.py:33-39).
+
+        The articles write is a single streaming pass: html from the
+        pages cache -> fused parse UDF -> parquet. Never cache the
+        parsed rows — materializing ~GBs of article content next to the
+        pages cache causes storage eviction/spill that halves the parse
+        stage's core scaling (measured: 2x slower at 8 cores). Rejected
+        rows are derived AFTER the write from key arithmetic (fetched
+        parse keys ANTI written article keys) — no second UDF pass, no
+        cache; see the quarantine write.
+
+        WeiboPost is a distinct schema in the reference (weibo.py:15-24
+        incl. engagement metrics) persisted as its own table, but weibo
+        html crosses the Arrow boundary ONCE: the full-struct fused UDF
+        emits the article view AND the post fields together, html is
+        dropped before the cache (the cached rows are ~KBs of text, not
+        payloads), and both the articles union and the weibo_posts
+        write read the cached result."""
+        r = st.r
         parse_eff = parse_rows.withColumn(
             "parser", P.U.select_parser_id(F.col("url"), F.col("parser"))
         ).where(F.col("parser").isNotNull())
-        # The articles write is a single streaming pass: html from the
-        # pages cache -> fused parse UDF -> parquet. Never cache the
-        # parsed rows — materializing ~GBs of article content next to
-        # the pages cache causes storage eviction/spill that halves the
-        # parse stage's core scaling (measured: 2x slower at 8 cores).
-        # Rejected rows are derived AFTER the write from key arithmetic
-        # (fetched parse keys ANTI written article keys) — no second
-        # UDF pass, no cache; see quarantine below.
-        # WeiboPost is a distinct schema in the reference (weibo.py:15-24
-        # incl. engagement metrics) persisted as its own table, but weibo
-        # html crosses the Arrow boundary ONCE: the full-struct fused UDF
-        # emits the article view AND the post fields together, html is
-        # dropped before the cache (the cached rows are ~KBs of text, not
-        # payloads), and both the articles union and the weibo_posts
-        # write read the cached result.
-        weibo_full = (
+        weibo_full = st.cache(
             parse_eff.where(F.col("parser") == "weibo")
             .select("url", "url_hash", "parser",
                     P.parse_weibo_full_udf(F.col("html"),
-                                           F.col("url")).alias("_a"))
-            .cache()
-        )
-        articles = HY.with_store_columns(
+                                           F.col("url")).alias("_a")))
+        st.articles = HY.with_store_columns(
             P.parse_articles(parse_eff, analyze=True,
                              weibo_parsed=weibo_full), r
         ).withColumn("round", F.lit(r))
-        weibo_posts = (
+        st.weibo_posts = (
             weibo_full.where(F.col("_a.ok").isNotNull())
             .select(
                 F.col("url"),
@@ -448,89 +589,88 @@ class CrawlEngine:
             ).withColumn("round", F.lit(r))
         )
 
-        # E1: link expansion from discover rows. A round with no
-        # discover-labeled rows (the common steady state of two-phase
-        # routing) skips the whole expansion/dedup/sequencing plan —
-        # several driver jobs of pure fixed cost on provably empty data.
-        children = deduped = filters = None
-        if has_discover:
-            children = L.expand_links(discover_rows, cfg.n_buckets,
-                                      cfg.rediscover)
-            children = D.first_wins(
-                children.withColumn(
-                    "seq", F.col("parent_seq") * 1024 + F.col("pos")
-                ),
-                "url_hash", "seq",
-            )
-            # Seen-filter maintenance is INCREMENTAL: the per-bucket
-            # blooms come from the previous complete round's snapshot
-            # (same round tag as the seen log they summarize —
-            # consistent by construction) and only this round's inserts
-            # are OR-ed in (O(delta), not O(seen)). The full build runs
-            # only when the base round carries no filter snapshot;
-            # buckets that outgrow their bit array degrade to the exact
-            # path and are rebuilt below, right-sized, from the seen
-            # log.
-            if cfg.use_bloom:
-                if "seen_filters" in bs:
-                    filters = self.catalog.read("seen_filters",
-                                                bs["seen_filters"])
-                else:
-                    filters = D.build_bloom_filters(
-                        seen.select("host_bucket", "url_hash").distinct(),
-                        capacity=cfg.bloom_capacity)
-            # cached: the sequencer's planning passes (count / bound
-            # sample / bucket counts) and the final consumers all read
-            # the flag-dedup output — one evaluation of the anti-join
-            # chain. Flag mode keeps EVERY child row (seen rows marked
-            # _fresh=false) so the links-discovered count and the child
-            # bucket set fall out of the sequencer's planning job — the
-            # separate children.agg barrier is gone (one fewer driver
-            # round-trip per discovery round on real executors).
-            deduped = D.dedup_against_seen(children, seen, filters,
-                                           flag_col="_fresh") \
-                       .drop("seq").cache()
-            fresh, plan_stats = assign_global_seq(
-                deduped, ["parent_seq", "pos"], start=max_seq + 1,
-                gate_col="_fresh", set_col="host_bucket",
-            )
-            # the sequencer's two internal planning jobs (fused
-            # count+sample+links-stats, per-bucket counts) ARE driver
-            # barriers — count them so _collects is the round's true
-            # job-barrier tally, not just the engine's own collects
-            self.last_round_collects += 2 if plan_stats["n"] else 1
-            n_fresh = plan_stats["n"]
-            n_children = plan_stats["n_all"]
-            child_buckets = {int(b) for b in plan_stats["set"]}
-            touched_buckets |= child_buckets
-            # cached: consumed 2x (pending union + seen inserts); its
-            # row count fell out of the sequencer's planning pass
-            fresh_frontier = fresh.select(
-                "url", "url_hash", "host", "host_bucket", "depth",
-                "priority", "parser", "label", "discovered_from", "seq",
-                F.lit(r + 1).alias("round"), F.lit("pending").alias("state"),
-                F.lit(0).alias("retry_count"),
-            ).cache()
-        else:
-            fresh_frontier = self.spark.createDataFrame([], frontier.schema)
-            n_fresh = 0
-            n_children, child_buckets = 0, set()
+    def _discover(self, st: _RoundState, discover_rows: DataFrame,
+                  has_discover: bool) -> None:
+        """E1: link expansion from discover rows → first-wins → dedup
+        against seen (bloom + exact) → global seq. A batch with no
+        discover-labeled rows (the common steady state of two-phase
+        routing) skips the whole plan — several driver jobs of pure
+        fixed cost on provably empty data."""
+        cfg = self.cfg
+        if not has_discover:
+            st.fresh = self.spark.createDataFrame([], st.frontier.schema)
+            st.counts["links_discovered"] = st.counts["links_enqueued"] = 0
+            return
+        children = L.expand_links(discover_rows, cfg.n_buckets,
+                                  cfg.rediscover)
+        children = D.first_wins(
+            children.withColumn(
+                "seq", F.col("parent_seq") * 1024 + F.col("pos")),
+            "url_hash", "seq",
+        )
+        # the per-bucket blooms come from the base round's snapshot
+        # (same round tag as the seen log they summarize — consistent
+        # by construction); this round's inserts are OR-ed in by the
+        # seen write (O(delta), not O(seen))
+        if cfg.use_bloom:
+            st.filters = self.catalog.read("seen_filters",
+                                           st.bs["seen_filters"])
+        # cached: the sequencer's planning passes (count / bound
+        # sample / bucket counts) and the final consumers all read the
+        # flag-dedup output — one evaluation of the anti-join chain.
+        # Flag mode keeps EVERY child row (seen rows marked
+        # _fresh=false) so the links-discovered count and the child
+        # bucket set fall out of the sequencer's planning job.
+        deduped = st.cache(
+            D.dedup_against_seen(children, st.seen, st.filters,
+                                 flag_col="_fresh").drop("seq"))
+        fresh, plan_stats = assign_global_seq(
+            deduped, ["parent_seq", "pos"], start=st.max_seq + 1,
+            gate_col="_fresh", set_col="host_bucket",
+        )
+        # the sequencer's internal planning jobs (fused
+        # count+sample+links-stats, per-bucket counts) ARE driver
+        # barriers — count them so _collects is the round's true
+        # job-barrier tally, not just the engine's own collects
+        self.last_round_collects += 2 if plan_stats["n"] else 1
+        st.counts["links_enqueued"] = plan_stats["n"]
+        st.counts["links_discovered"] = plan_stats["n_all"]
+        st.child_buckets = {int(b) for b in plan_stats["set"]}
+        st.touched |= st.child_buckets
+        # cached: consumed 2x (pending union + seen inserts)
+        st.fresh = st.cache(fresh.select(
+            "url", "url_hash", "host", "host_bucket", "depth",
+            "priority", "parser", "label", "discovered_from", "seq",
+            F.lit(st.r + 1).alias("round"), F.lit("pending").alias("state"),
+            F.lit(0).alias("retry_count"),
+        ))
 
-        # frontier state transitions, computed over the TOUCHED buckets
-        # only: every row that can change state (scheduled, blocked,
-        # recrawl) is in a touched bucket by construction, and untouched
-        # buckets' pending rows are carried forward by reference in the
-        # shard-scoped commit — never rescanned, never rewritten. The
-        # host_bucket IN (...) predicate prunes the pending scan to the
-        # touched shards' files (each file holds one bucket).
-        touched_list = sorted(touched_buckets)
-        fr_touched = frontier.where(
-            F.col("host_bucket").isin(touched_list))
-        fetched_keys = fetched.select("url_hash").withColumn("_new", F.lit("fetched"))
-        missing_keys = missing.select("url_hash").withColumn("_new", F.lit("fetch_failed"))
-        blocked_keys = blocked.select("url_hash").withColumn("_new", F.lit("robots_blocked"))
-        transitions = fetched_keys.unionByName(missing_keys).unionByName(blocked_keys)
-        trans = (
+    def _transition(self, st: _RoundState, fetched: DataFrame,
+                    missing: DataFrame, blocked: DataFrame) -> None:
+        """Frontier state transitions, computed over the TOUCHED buckets
+        only: every row that can change state (scheduled, blocked,
+        recrawl) is in a touched bucket by construction, and untouched
+        buckets' pending rows are carried forward by reference in the
+        shard-scoped commit — never rescanned, never rewritten. The
+        host_bucket IN (...) predicate prunes the pending scan to the
+        touched shards' files (each file holds one bucket).
+
+        J3 as events: one fetch event per fetched URL (the MERGE
+        update), one insert event per fresh child (the MERGE insert)
+        and one fail event per retry-exhausted URL (url_tracker status
+        'failed', cassandra_manager.py:151); the seen write adds one
+        duplicate event per re-store whose content hash matched. O(round
+        delta) rows — the full seen table is never rewritten."""
+        r, cfg = st.r, self.cfg
+        fr_touched = st.frontier.where(
+            F.col("host_bucket").isin(sorted(st.touched)))
+        transitions = (
+            fetched.select("url_hash").withColumn("_new", F.lit("fetched"))
+            .unionByName(missing.select("url_hash")
+                         .withColumn("_new", F.lit("fetch_failed")))
+            .unionByName(blocked.select("url_hash")
+                         .withColumn("_new", F.lit("robots_blocked"))))
+        trans = st.cache(
             fr_touched.join(transitions, "url_hash", "left")
             .withColumn(
                 "retry_count",
@@ -545,299 +685,200 @@ class CrawlEngine:
                 .when(F.col("_new") == "fetch_failed", "failed")
                 .otherwise(F.col("_new")),
             )
-            .select(*FRONTIER_COLS, "_new")
-        ).cache()
-        new_pending_delta = trans.where(F.col("state") == "pending") \
-                                 .select(*FRONTIER_COLS) \
-                                 .unionByName(fresh_frontier)
-        archive_delta = trans.where(F.col("state") != "pending") \
-                             .select(*FRONTIER_COLS)
+            .select(*FRONTIER_COLS, "_new"))
+        st.pending_delta = trans.where(F.col("state") == "pending") \
+                                .select(*FRONTIER_COLS) \
+                                .unionByName(st.fresh)
+        st.archive_delta = trans.where(F.col("state") != "pending") \
+                                .select(*FRONTIER_COLS)
+        st.seen_delta = (
+            _seen_events(st.scheduled.join(fetched, "url_hash"),
+                         "scraped", r)
+            .unionByName(_seen_events(st.fresh, "pending", r + 1))
+            .unionByName(_seen_events(
+                trans.where(F.col("state") == "failed"), "failed", r)))
 
-        # J3 as events: one fetch event per fetched URL (the MERGE
-        # update), one insert event per fresh child (the MERGE insert),
-        # one fail event per retry-exhausted URL, and one duplicate
-        # event per re-store whose content hash matched (added in
-        # w_seen below, after the history delta that detects it).
-        # O(round delta) rows — the full seen table is never rewritten.
-        _null_i = F.lit(None).cast("int")
-        fetch_events = (
-            scheduled.join(fetched, "url_hash")
-            .select(
-                "url_hash", "url", "host_bucket",
-                _null_i.alias("first_round"),
-                F.lit(r).alias("last_round"),
-                F.lit(1).alias("scrape_count"),
-                F.lit(r).alias("last_scrape_round"),
-                _null_i.alias("last_dup_round"),
-                _null_i.alias("last_fail_round"),
-                F.lit("scraped").alias("status"),
-            )
-        )
-        insert_events = fresh_frontier.select(
-            "url_hash", "url", "host_bucket",
-            F.lit(r + 1).alias("first_round"),
-            F.lit(r + 1).alias("last_round"),
-            F.lit(0).alias("scrape_count"),
-            _null_i.alias("last_scrape_round"),
-            _null_i.alias("last_dup_round"),
-            _null_i.alias("last_fail_round"),
-            F.lit("pending").alias("status"),
-        )
-        # retry-exhausted rows become terminal 'failed' in the tracker
-        # (url_tracker DDL status 'failed', cassandra_manager.py:151)
-        fail_events = trans.where(F.col("state") == "failed").select(
-            "url_hash", "url", "host_bucket",
-            _null_i.alias("first_round"),
-            F.lit(r).alias("last_round"),
-            F.lit(0).alias("scrape_count"),
-            _null_i.alias("last_scrape_round"),
-            _null_i.alias("last_dup_round"),
-            F.lit(r).alias("last_fail_round"),
-            F.lit("failed").alias("status"),
-        )
-        seen_delta = fetch_events.unionByName(insert_events) \
-                                 .unionByName(fail_events)
+    # -- phase: write articles -------------------------------------------------
+    def _write_articles(self, st: _RoundState) -> None:
+        """The round's big UDF job, alone. Each write is one snapshot;
+        the round tag makes the group atomic-at-resume (E5), and appends
+        pin their base snapshot so a torn round's orphans are never
+        carried forward."""
+        st.snaps["articles"] = self._append(st, "articles", st.articles)
 
-        # commits (each write is one snapshot; the round tag makes the
-        # group atomic-at-resume — E5). Appends pin their base snapshot
-        # so a torn round's orphans are never carried forward.
-        #
-        # Write scheduling: the articles write (the round's big UDF job)
-        # runs first and alone; every remaining write targets a
-        # DIFFERENT table over already-cached round-delta frames, so
-        # they submit concurrently from driver threads and Spark
-        # interleaves their (small) jobs across free cores — the
-        # serialized tail of per-table write barriers is what otherwise
-        # caps scaling efficiency on short rounds. Durability is
-        # unchanged: nothing is committed until commit_round lands
-        # AFTER every write has returned.
-        snaps = {}
-        _mark("t_plan")
-        snaps["articles"] = self.catalog.write_snapshot(
-            "articles", articles, {"round": r}, mode="append",
-            base_snapshot_id=bs.get("articles", -1))
-        _mark("t_write_articles")
+    def _append(self, st: _RoundState, table: str, df: DataFrame,
+                **kwargs) -> int:
+        return self.catalog.write_snapshot(
+            table, df, {"round": st.r}, mode="append",
+            base_snapshot_id=st.bs.get(table, -1), **kwargs)
 
-        def w_weibo():
-            snaps["weibo_posts"] = self.catalog.write_snapshot(
-                "weibo_posts", weibo_posts, {"round": r}, mode="append",
-                base_snapshot_id=bs.get("weibo_posts", -1))
-
-        def w_quarantine():
-            # quarantine + 'errors' (cassandra_manager.py:298,314):
-            # fetched PARSE-labeled rows with a selected parser that
-            # produced no stored article. Pure key arithmetic over
-            # cached round-delta frames + the just-written articles
-            # delta (pruned to one column).
-            art_keys = self.catalog.read_snapshot_delta(
-                "articles", snaps["articles"]).select("url_hash")
-            quarantine = (
-                sched_parse.join(fetched, "url_hash")
-                .withColumn("parser_used",
-                            P.U.select_parser_id(F.col("url"),
-                                                 F.col("parser")))
-                .where(F.col("parser_used").isNotNull())
-                .select("url", "url_hash", "parser_used")
-                .join(art_keys, "url_hash", "left_anti")
-                .withColumn("fail_reason", F.lit("parse_failed"))
-                .withColumn("round", F.lit(r))
-            )
-            snaps["quarantine"] = self.catalog.write_snapshot(
-                "quarantine", quarantine, {"round": r}, mode="append",
-                base_snapshot_id=bs.get("quarantine", -1))
-
-        def w_history():
-            # S8 content history: change detection against the latest
-            # prior version, computed from the just-written articles
-            # delta (three narrow columns) — never a re-parse
-            hist_prior = (self.catalog.read("content_history",
-                                            bs["content_history"])
-                          if "content_history" in bs else None)
-            hist_delta = HY.content_history_delta(
-                self.catalog.read_snapshot_delta("articles",
-                                                 snaps["articles"])
-                .select("url_hash", "id", "content_hash"),
-                hist_prior, r)
-            snaps["content_history"] = self.catalog.write_snapshot(
-                "content_history", hist_delta, {"round": r}, mode="append",
-                base_snapshot_id=bs.get("content_history", -1))
-
-        def w_frontier():
-            # THE O(round delta) commit: only the touched buckets'
-            # pending rows are rewritten; every other bucket's data dir
-            # is carried by reference (Iceberg overwritePartitions).
-            # The archive append is sharded by terminal state so the
-            # per-state round stats below read from parquet footers.
-            snaps["frontier"] = self.catalog.overwrite_shards(
-                "frontier",
-                new_pending_delta.where(
-                    F.col("host_bucket").isin(touched_list)),
-                touched_list, "host_bucket",
-                {"round": r, "max_seq": int(max_seq) + n_fresh},
-                base_snapshot_id=bs["frontier"])
-            snaps["frontier_archive"] = self.catalog.write_snapshot(
-                "frontier_archive", archive_delta, {"round": r},
-                mode="append", shard_col="state",
-                base_snapshot_id=bs.get("frontier_archive", -1))
-
-        def w_seen():
-            # duplicate-tracking events (cassandra_manager.py:454-464):
-            # this round's stored articles whose content hash matched
-            # the latest prior version. Detected by the history delta
-            # just written (w_seen runs after w_history on one thread);
-            # url/host_bucket come from the cached scheduled batch —
-            # O(round delta) keys, no history rescan.
-            dup_keys = (
-                self.catalog.read_snapshot_delta(
-                    "content_history", snaps["content_history"])
-                .where(F.col("change_type") == "duplicate")
-                .select("url_hash"))
-            dup_events = scheduled.join(dup_keys, "url_hash").select(
-                "url_hash", "url", "host_bucket",
-                _null_i.alias("first_round"),
-                F.lit(r).alias("last_round"),
-                F.lit(0).alias("scrape_count"),
-                _null_i.alias("last_scrape_round"),
-                F.lit(r).alias("last_dup_round"),
-                _null_i.alias("last_fail_round"),
-                F.lit("duplicate").alias("status"),
-            )
-            snaps["seen"] = self.catalog.write_snapshot(
-                "seen", seen_delta.unionByName(dup_events),
-                {"round": r}, mode="append",
-                shard_col="host_bucket",
-                base_snapshot_id=bs.get("seen", -1))
-            if cfg.compact_seen_every and \
-                    (r + 1) % cfg.compact_seen_every == 0:
-                # rotating per-group compaction: merge ONE bucket
-                # group's event dirs into its merged view and swap only
-                # those shards — O(seen/groups) per event, never a
-                # full-table stall. Merged rows are themselves valid
-                # events (min/max/sum re-merge associatively), so a
-                # group's view stays correct across future appends.
-                groups = max(1, cfg.seen_compact_groups)
-                g = ((r + 1) // cfg.compact_seen_every - 1) % groups
-                group = [b for b in range(cfg.n_buckets)
-                         if b % groups == g]
-                compacted = merged_seen(self.catalog.read_shards(
-                    "seen", group, snaps["seen"]))
-                snaps["seen"] = self.catalog.overwrite_shards(
-                    "seen", compacted, group, "host_bucket",
-                    {"round": r, "compacted_group": g},
-                    base_snapshot_id=snaps["seen"])
-            if cfg.use_bloom and not has_discover:
-                # no inserts this round: the base filter snapshot is
-                # still exact for the new seen log — re-commit its id
-                if "seen_filters" in bs:
-                    snaps["seen_filters"] = bs["seen_filters"]
-            elif cfg.use_bloom:
-                # incremental filter maintenance is shard-scoped too:
-                # only buckets receiving inserts re-merge (cogrouped
-                # applyInPandas over O(delta) keys) and only their
-                # shards are rewritten. Degraded buckets (n_bits=0
-                # sentinel) are detected from the written delta's
-                # narrow health columns via a driver-side pyarrow read
-                # — no extra Spark job barrier.
-                # with a prior filter snapshot, only the touched
-                # buckets' filters enter the merge and only their
-                # shards are rewritten; a fresh full build (no prior
-                # snapshot) writes every bucket on a fresh lineage.
-                if "seen_filters" in bs:
-                    merge_in = filters.where(
-                        F.col("host_bucket").isin(sorted(child_buckets)))
-                else:
-                    merge_in = filters
-                new_filters = D.merge_bloom_filters(
-                    merge_in,
-                    insert_events.select("host_bucket", "url_hash"),
-                    capacity=cfg.bloom_capacity)
-                fid = self.catalog.overwrite_shards(
-                    "seen_filters", new_filters, sorted(child_buckets),
-                    "host_bucket",
-                    {"round": r, "for_seen_snapshot": snaps["seen"]},
-                    base_snapshot_id=bs.get("seen_filters", -1))
-                health = self.catalog.snapshot_delta_columns_local(
-                    "seen_filters", fid,
-                    ["host_bucket", "n_bits", "n_items"])
-                degraded = [h for h in health if int(h["n_bits"]) == 0]
-                if degraded:
-                    ids = sorted(int(h["host_bucket"]) for h in degraded)
-                    cap = max(cfg.bloom_capacity,
-                              2 * max(int(h["n_items"]) for h in degraded))
-                    rebuilt = D.build_bloom_filters(
-                        self.catalog.read_shards("seen", ids, snaps["seen"])
-                        .select("host_bucket", "url_hash").distinct(),
-                        capacity=cap)
-                    fid = self.catalog.overwrite_shards(
-                        "seen_filters", rebuilt, ids, "host_bucket",
-                        {"round": r, "for_seen_snapshot": snaps["seen"],
-                         "rebuilt_buckets": ids},
-                        base_snapshot_id=fid)
-                snaps["seen_filters"] = fid
-
-        def w_history_then_seen():
-            # seen's duplicate events derive from the history delta, so
-            # these two writes are sequenced on one thread; the other
-            # tables still overlap them.
-            w_history()
-            w_seen()
-
-        from concurrent.futures import ThreadPoolExecutor
+    # -- phase: write parallel -------------------------------------------------
+    def _write_parallel(self, st: _RoundState) -> None:
+        """Every remaining write targets a DIFFERENT table over
+        already-cached round-delta frames, so they submit concurrently
+        from driver threads and Spark interleaves their (small) jobs
+        across free cores — the serialized tail of per-table write
+        barriers is what otherwise caps scaling efficiency on short
+        rounds. Durability is unchanged: nothing is committed until the
+        round commit lands AFTER every write has returned. Each task
+        returns the snapshot ids it wrote."""
         with ThreadPoolExecutor(max_workers=6) as pool:
-            futs = [pool.submit(f) for f in
-                    (w_weibo, w_quarantine, w_frontier,
-                     w_history_then_seen)]
-            for f in futs:
-                f.result()          # propagate the first failure
-        _mark("t_write_parallel")
+            futs = [pool.submit(task, st) for task in
+                    (self._w_weibo, self._w_quarantine, self._w_frontier,
+                     self._w_history_then_seen)]
+            written = [f.result() for f in futs]  # raises the first failure
+        for ids in written:
+            st.snaps.update(ids)
 
-        # A1/A4 metrics — every count is either a byproduct of the one
-        # round-planning collect or a parquet-footer read of this
-        # round's newly written files (driver-side, no Spark job, no
-        # barrier); nothing rescans a cumulative table, so metric cost
-        # stays flat as the crawl ages. The state-sharded archive gives
-        # per-state counts straight from its leaf dirs.
-        n_fetched = self.catalog.snapshot_delta_rowcount(
-            "frontier_archive", snaps["frontier_archive"],
-            shards=["fetched"])
-        n_sched = n_scheduled_rows
-        pending_after = self.catalog.snapshot_rowcount(
-            "frontier", snaps["frontier"])
-        n_articles = self.catalog.snapshot_delta_rowcount(
-            "articles", snaps["articles"])
-        n_errors = self.catalog.snapshot_delta_rowcount(
-            "quarantine", snaps["quarantine"])
-        metrics = {
-            "round": r,
-            "scheduled": n_sched,
-            "fetched": n_fetched,
-            "fetch_failed": n_sched - n_fetched,
-            "robots_blocked": n_blocked,
-            "articles_scraped": n_articles,
-            "errors": n_errors,
-            "links_discovered": n_children,
-            "links_enqueued": n_fresh,
-            "duplicates_skipped": n_children - n_fresh,
-            "recrawl_enqueued": n_recrawl,
-            "pending_after": pending_after,
-        }
-        mdf = self.spark.createDataFrame(
-            [(r, k, int(v)) for k, v in metrics.items()
-             if k != "round" and not k.startswith("_")],
-            "round int, metric string, value long",
-        ).withColumn("round", F.lit(r))
-        snaps["round_metrics"] = self.catalog.write_snapshot(
-            "round_metrics", mdf, {"round": r}, mode="append",
-            base_snapshot_id=bs.get("round_metrics", -1))
-        self.catalog.commit_round(r, snaps)
-        for df in (scheduled, fetched, blocked, fresh_frontier,
-                   trans, deduped, recrawl_cohort, weibo_full):
-            if df is not None:
-                df.unpersist()
-        _mark("t_metrics")
-        metrics["_timings"] = _tm
-        metrics["_collects"] = self.last_round_collects
-        return metrics
+    def _w_weibo(self, st: _RoundState) -> dict[str, int]:
+        return {"weibo_posts": self._append(st, "weibo_posts",
+                                            st.weibo_posts)}
+
+    def _w_quarantine(self, st: _RoundState) -> dict[str, int]:
+        """quarantine + 'errors' (cassandra_manager.py:298,314): fetched
+        PARSE-labeled rows with a selected parser that produced no
+        stored article. Pure key arithmetic over cached round-delta
+        frames + the just-written articles delta (pruned to one
+        column)."""
+        art_keys = self.catalog.read_snapshot_delta(
+            "articles", st.snaps["articles"]).select("url_hash")
+        quarantine = (
+            st.parse_fetched
+            .withColumn("parser_used",
+                        P.U.select_parser_id(F.col("url"), F.col("parser")))
+            .where(F.col("parser_used").isNotNull())
+            .select("url", "url_hash", "parser_used")
+            .join(art_keys, "url_hash", "left_anti")
+            .withColumn("fail_reason", F.lit("parse_failed"))
+            .withColumn("round", F.lit(st.r))
+        )
+        return {"quarantine": self._append(st, "quarantine", quarantine)}
+
+    def _w_frontier(self, st: _RoundState) -> dict[str, int]:
+        """THE O(round delta) commit: only the touched buckets' pending
+        rows are rewritten; every other bucket's data dir is carried by
+        reference (Iceberg overwritePartitions). The snapshot's
+        properties carry the next ``max_seq`` and the round's plan-time
+        counts (``round_metrics`` reads them back). The archive append
+        is sharded by terminal state so per-state round stats read from
+        parquet footers."""
+        touched = sorted(st.touched)
+        fid = self.catalog.overwrite_shards(
+            "frontier",
+            st.pending_delta.where(F.col("host_bucket").isin(touched)),
+            touched, "host_bucket",
+            {"round": st.r,
+             "max_seq": st.max_seq + st.counts["links_enqueued"],
+             **st.counts},
+            base_snapshot_id=st.bs["frontier"])
+        return {"frontier": fid,
+                "frontier_archive": self._append(
+                    st, "frontier_archive", st.archive_delta,
+                    shard_col="state")}
+
+    def _w_history_then_seen(self, st: _RoundState) -> dict[str, int]:
+        """seen's duplicate events derive from the history delta, so
+        these two writes are sequenced on one thread; the other tables
+        still overlap them.
+
+        S8 content history: change detection against the latest prior
+        version, computed from the just-written articles delta (three
+        narrow columns) — never a re-parse."""
+        hist_prior = (self.catalog.read("content_history",
+                                        st.bs["content_history"])
+                      if "content_history" in st.bs else None)
+        hist_delta = HY.content_history_delta(
+            self.catalog.read_snapshot_delta("articles", st.snaps["articles"])
+            .select("url_hash", "id", "content_hash"),
+            hist_prior, st.r)
+        hid = self._append(st, "content_history", hist_delta)
+        return {"content_history": hid, **self._w_seen(st, hid)}
+
+    def _w_seen(self, st: _RoundState, history_id: int) -> dict[str, int]:
+        """The seen event append, its rotating compaction, and the seen
+        filters. Duplicate-tracking events (cassandra_manager.py:454-464)
+        are this round's stored articles whose content hash matched the
+        latest prior version, as detected by the history delta just
+        written; url/host_bucket come from the cached scheduled batch —
+        O(round delta) keys, no history rescan."""
+        cfg, r = self.cfg, st.r
+        dup_keys = (
+            self.catalog.read_snapshot_delta("content_history", history_id)
+            .where(F.col("change_type") == "duplicate")
+            .select("url_hash"))
+        sid = self._append(
+            st, "seen", st.seen_delta.unionByName(_seen_events(
+                st.scheduled.join(dup_keys, "url_hash"), "duplicate", r)),
+            shard_col="host_bucket")
+        if cfg.compact_seen_every and (r + 1) % cfg.compact_seen_every == 0:
+            # rotating per-group compaction: merge ONE bucket group's
+            # event dirs into its merged view and swap only those
+            # shards — O(seen/groups) per event, never a full-table
+            # stall. Merged rows are themselves valid events
+            # (min/max/sum re-merge associatively), so a group's view
+            # stays correct across future appends.
+            groups = max(1, cfg.seen_compact_groups)
+            g = ((r + 1) // cfg.compact_seen_every - 1) % groups
+            group = [b for b in range(cfg.n_buckets) if b % groups == g]
+            sid = self.catalog.overwrite_shards(
+                "seen", merged_seen(self.catalog.read_shards("seen", group,
+                                                             sid)),
+                group, "host_bucket", {"round": r, "compacted_group": g},
+                base_snapshot_id=sid)
+        out = {"seen": sid}
+        if cfg.use_bloom:
+            out["seen_filters"] = self._w_seen_filters(st, sid)
+        return out
+
+    def _w_seen_filters(self, st: _RoundState, seen_id: int) -> int:
+        """Incremental seen-filter maintenance, shard-scoped: only the
+        buckets receiving inserts re-merge (cogrouped applyInPandas over
+        O(delta) keys) and only their shards are rewritten. A round with
+        no inserts re-commits the base id — it is still exact for the
+        new seen log. Degraded buckets (n_bits=0 sentinel) are detected
+        from the written delta's narrow health columns via a driver-side
+        pyarrow read (no Spark job barrier) and rebuilt, right-sized,
+        from the seen log."""
+        cfg, r = self.cfg, st.r
+        if st.filters is None:      # no discover rows, so no inserts
+            return st.bs["seen_filters"]
+        buckets = sorted(st.child_buckets)
+        new_filters = D.merge_bloom_filters(
+            st.filters.where(F.col("host_bucket").isin(buckets)),
+            st.fresh.select("host_bucket", "url_hash"),
+            capacity=cfg.bloom_capacity)
+        fid = self.catalog.overwrite_shards(
+            "seen_filters", new_filters, buckets, "host_bucket",
+            {"round": r, "for_seen_snapshot": seen_id},
+            base_snapshot_id=st.bs["seen_filters"])
+        health = self.catalog.snapshot_delta_columns_local(
+            "seen_filters", fid, ["host_bucket", "n_bits", "n_items"])
+        degraded = [h for h in health if int(h["n_bits"]) == 0]
+        if not degraded:
+            return fid
+        ids = sorted(int(h["host_bucket"]) for h in degraded)
+        cap = max(cfg.bloom_capacity,
+                  2 * max(int(h["n_items"]) for h in degraded))
+        rebuilt = D.build_bloom_filters(
+            self.catalog.read_shards("seen", ids, seen_id)
+            .select("host_bucket", "url_hash").distinct(),
+            capacity=cap)
+        return self.catalog.overwrite_shards(
+            "seen_filters", rebuilt, ids, "host_bucket",
+            {"round": r, "for_seen_snapshot": seen_id,
+             "rebuilt_buckets": ids},
+            base_snapshot_id=fid)
+
+    # -- phase: commit ---------------------------------------------------------
+    def _commit(self, st: _RoundState) -> None:
+        """The round becomes durable here (E5); its metrics are read
+        back from what it committed, by the same function any later
+        reader uses."""
+        self.catalog.commit_round(st.r, st.snaps)
+        for df in st.cached:
+            df.unpersist()
+        st.metrics = round_metrics(self.catalog,
+                                   {"round": st.r, "snapshots": st.snaps})
 
     # -- loop -------------------------------------------------------------------
     def run(self, seeds: DataFrame | None = None,

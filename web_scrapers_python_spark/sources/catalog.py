@@ -1,8 +1,13 @@
 """Snapshot catalog — the engine's checkpointed state store.
 
 Design target is **Iceberg** (SURVEY §1.4, §2.10 E5): every crawl round
-commits `frontier` / `seen` / `articles` / `round_metrics` atomically,
-and resume/time-travel reads any previous snapshot (`VERSION AS OF`).
+commits `frontier` / `seen` / `articles` (and the other round tables)
+atomically, and resume/time-travel reads any previous snapshot
+(`VERSION AS OF`). A round's metrics are not a table: the engine stores
+its plan-time counts in the frontier snapshot's properties and
+``plans.engine.round_metrics`` rebuilds the record from them plus the
+parquet-footer row counts of the round's deltas.
+
 This sandbox ships no Iceberg runtime jar and has no network, so this
 module provides the same semantics over plain parquet:
 
@@ -15,7 +20,9 @@ module provides the same semantics over plain parquet:
   properties (round, counts) — like Iceberg's snapshot summary;
 - ``commit_round`` groups multiple table snapshots under one round tag
   so a crash between table writes is recoverable (rounds are replayed
-  from the last complete tag — write-ahead intent + idempotent replay).
+  from the last complete tag — write-ahead intent + idempotent replay);
+  a data dir orphaned by a crash before its log entry landed is
+  removed by the next write to that table.
 
 On a real cluster every call maps 1:1 onto Iceberg:
 ``write_snapshot`` → ``df.writeTo(tbl).overwritePartitions()`` /
@@ -167,8 +174,13 @@ class SnapshotCatalog:
         snap_id = (snaps[-1]["id"] + 1) if snaps else 0
         data_dir = os.path.join(tdir, f"snap-{snap_id}")
         tmp_dir = data_dir + ".tmp"
-        if os.path.exists(tmp_dir):
-            shutil.rmtree(tmp_dir)
+        # leftovers of a crash: a stale tmp dir, or a snap-<n> dir renamed
+        # into place whose snapshot never reached the log (ids come from
+        # the log, so nothing references it). Either would block the
+        # write; neither holds committed data.
+        for stale in (tmp_dir, data_dir):
+            if os.path.exists(stale):
+                shutil.rmtree(stale)
         writer = df
         if shard_col is not None:
             # cluster each shard's rows into one task before partitionBy

@@ -239,13 +239,6 @@ def build_page(seed: int, i: int, n: int, n_hosts: int,
     }
 
 
-def pages_pdf(seed: int, lo: int, hi: int, n: int, n_hosts: int,
-              body_scale: int = 1) -> pd.DataFrame:
-    rows = [build_page(seed, i, n, n_hosts, body_scale)
-            for i in range(lo, hi)]
-    return pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text", "lang"])
-
-
 def generate_pages(spark, n: int, n_hosts: int = 64, seed: int = 42,
                    partitions: int | None = None, body_scale: int = 1):
     """Distributed generation: pure function of the row index — no

@@ -10,8 +10,8 @@ here:
 - ``parse_proxy_payloads`` — the response-JSON decode
   (proxy_config.py:69-85). A payload is either a dict with a
   ``proxies`` array of ``{protocol, ip, port}`` records (protocol
-  defaults to "http" when the key is absent; records missing ip or
-  port are dropped) or a bare JSON array of proxy strings (falsy
+  defaults to "http" when the key is absent; records with a missing or
+  empty ip or port are dropped) or a bare JSON array of proxy strings (falsy
   entries dropped, :82-84). Each kept record becomes
   ``proto://ip:port``. A payload that parses as neither shape yields
   no rows — the reference returns ``[]`` on a decode error (:86-88).
@@ -51,12 +51,17 @@ _LIST_SCHEMA = "array<string>"
 
 def _format_record(p: Column) -> Column:
     """{protocol, ip, port} → 'proto://ip:port' (proxy_config.py:76-81);
-    NULL when ip or port is missing (the reference's ``if ip and port``
-    guard). Numeric ports arrive as their decimal string — Spark's
-    from_json coerces JSON numbers into string fields exactly like the
-    reference's f-string renders ints."""
+    NULL when ip or port is missing or empty (the reference's ``if ip
+    and port`` guard). Numeric ports arrive as their decimal string —
+    Spark's from_json coerces JSON numbers into string fields exactly
+    like the reference's f-string renders ints.
+
+    Two inputs still diverge from the reference: a ``null`` protocol
+    becomes ``http`` here (the reference renders ``None://``), and a
+    JSON int ``0`` port is coerced to ``"0"`` and kept (the reference's
+    truthiness test drops it)."""
     return F.when(
-        p["ip"].isNotNull() & p["port"].isNotNull(),
+        (F.length(p["ip"]) > 0) & (F.length(p["port"]) > 0),
         F.concat(F.coalesce(p["protocol"], F.lit("http")),
                  F.lit("://"), p["ip"], F.lit(":"), p["port"]),
     )
