@@ -551,11 +551,14 @@ def main() -> None:
             import glob
 
             def key(p):
-                # optional letter suffix (_r05b = a same-round re-run;
-                # the earlier file stays on disk for transparency) —
-                # same round number, mtime breaks the tie newest-last
-                m = re.search(r"_r(\d+)[a-z]*\.json$", p)
-                return (int(m.group(1)) if m else -1, os.path.getmtime(p))
+                # optional suffix (_r05b, _r05_hostnoise = a same-round
+                # re-run; the earlier file stays on disk for
+                # transparency) — same round number, mtime breaks the
+                # tie newest-last, then the name (a suffixed re-run
+                # sorts after its base file)
+                m = re.search(r"_r(\d+)[a-z_]*\.json$", p)
+                return (int(m.group(1)) if m else -1, os.path.getmtime(p),
+                        p)
 
             return sorted(glob.glob(os.path.join(
                 os.path.dirname(os.path.abspath(__file__)), pattern)),
@@ -569,11 +572,13 @@ def main() -> None:
                     sj = json.load(f)
                 s = sj["scaling"]
                 # gate on the paired repeat-median when the artifact
-                # recorded one (see tools/scaling_bench.py): derive it
-                # here from the raw estimator values so artifacts
-                # written before the pass_estimator change gate the
-                # same way as new ones.
+                # recorded one over >= 3 repeats, exactly as
+                # tools/scaling_bench.py does: derive it here from the
+                # raw estimator values so artifacts written before the
+                # pass_estimator change gate the same way as new ones.
                 med = s.get("efficiency_repeat_median")
+                if len(s.get("efficiency_per_repeat") or []) < 3:
+                    med = None
                 gate = s["efficiency"] if med is None else med
                 # gate_valid: a session whose same-session pure-CPU
                 # control fell below the target cannot gate the engine

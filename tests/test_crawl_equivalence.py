@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from web_scrapers_python_spark.oracle import frontier_sim as sim
 from web_scrapers_python_spark.oracle import reference as ref
 from web_scrapers_python_spark.plans.engine import (
-    CrawlConfig, CrawlEngine, merged_seen, read_frontier_full)
+    CrawlConfig, CrawlEngine, merged_seen, read_frontier_full, round_metrics)
 from web_scrapers_python_spark.sources import datagen as G
 from web_scrapers_python_spark.sources.catalog import SnapshotCatalog
 from web_scrapers_python_spark.sources.seeds import read_seeds
@@ -206,11 +206,11 @@ def test_seen_rotating_compaction_equivalence(spark, pages, policy, seeds_df,
 def _tear_round(cat, r):
     """Leave round ``r`` torn the way a crash inside it would: junk data
     dirs renamed into place for ``articles`` and ``seen`` under the
-    snapshot ids their next writes pick, but no snapshot-log entry and
-    no ``commit_round``."""
+    snapshot ids their next writes pick, but no snapshot metadata file
+    and no ``commit_round``."""
     base = cat.last_complete_round()["snapshots"]
     for table in ("articles", "seen"):
-        snap_id = cat.snapshots(table)[-1]["id"] + 1
+        snap_id = cat.current_snapshot(table)["id"] + 1
         cat.read(table, base[table]).limit(3) \
             .withColumn("url", F.lit("https://torn.example.com/")) \
             .withColumn("url_hash", F.lit(f"torn-round-{r}")) \
@@ -218,16 +218,64 @@ def _tear_round(cat, r):
                                         f"snap-{snap_id}"))
 
 
+class _Crash(RuntimeError):
+    pass
+
+
+def _crash_frontier_commit(monkeypatch, cat):
+    """Round 1's ``frontier`` table commit raises inside the parallel
+    write pool (its data dir is already renamed into place); the
+    weibo, quarantine and history+seen tasks still commit."""
+    commit = cat._commit_snapshot
+
+    def failing(table, *args, **kwargs):
+        if table == "frontier":
+            raise _Crash("frontier commit")
+        return commit(table, *args, **kwargs)
+
+    monkeypatch.setattr(cat, "_commit_snapshot", failing)
+
+
+def _crash_round_commit(monkeypatch, cat):
+    """Every table snapshot of round 1 commits; ``commit_round`` never
+    runs."""
+    def failing(round_no, table_snapshots):
+        raise _Crash(f"round {round_no} commit")
+
+    monkeypatch.setattr(cat, "commit_round", failing)
+
+
+@pytest.mark.parametrize("crash", ["orphaned_dirs", "frontier_commit",
+                                   "round_commit"])
 def test_resume_from_snapshot_identity(spark, pages, policy, seeds_df,
-                                       golden, tmp_path):
-    """Kill after round k, and again inside round k+1 (orphaned data
-    dirs, no round commit); resume from the snapshot catalog → final
-    state identical to the uninterrupted run (E5)."""
+                                       golden, tmp_path, monkeypatch, crash):
+    """Kill after round k, and again inside round k+1 — with orphaned
+    data dirs and no round commit, with one parallel table commit
+    failing while the others land, or with every table committed but
+    no round commit; resume from the snapshot catalog → final state
+    identical to the uninterrupted run (E5)."""
     wh = tmp_path / "wh"
     cat = SnapshotCatalog(spark, str(wh))
     eng = CrawlEngine(spark, pages, policy, cat, CrawlConfig())
     eng.run(seeds_df, max_rounds=1)  # bootstrap + round 0, then 'crash'
-    _tear_round(cat, 1)              # crash inside round 1
+    if crash == "orphaned_dirs":     # crash inside round 1
+        _tear_round(cat, 1)
+    else:
+        with monkeypatch.context() as m:
+            (_crash_frontier_commit if crash == "frontier_commit"
+             else _crash_round_commit)(m, cat)
+            before = {t: cat.current_snapshot(t)["id"]
+                      for t in ("frontier", "seen", "articles")}
+            with pytest.raises(_Crash):
+                eng.run_round(1)
+        after = {t: cat.current_snapshot(t)["id"]
+                 for t in ("frontier", "seen", "articles")}
+        # the crash landed mid-round: the other tables committed
+        assert after["seen"] > before["seen"]
+        assert after["articles"] > before["articles"]
+        assert (after["frontier"] > before["frontier"]) == (
+            crash == "round_commit")
+    assert cat.last_complete_round()["round"] == 0
 
     # new engine + new catalog object over the same warehouse = resume
     cat2 = SnapshotCatalog(spark, str(wh))
@@ -241,6 +289,14 @@ def test_resume_from_snapshot_identity(spark, pages, policy, seeds_df,
     combined = [{"round": 0}] + metrics2
     assert len(combined) == len(golden.rounds)
     _assert_state_equal(cat2, golden)
+    # every committed round, replayed one included, did the simulator's
+    # work for that round (a replay over the torn round's committed
+    # tables would not)
+    for entry, g in zip([e for e in cat2.rounds() if e["round"] >= 0],
+                        golden.rounds):
+        m = round_metrics(cat2, entry)
+        assert (m["links_enqueued"], m["articles_scraped"], m["errors"]) \
+            == (g["enqueued"], g["articles"], g["errors"]), m
 
 
 def _assert_state_equal(cat, golden):
@@ -248,6 +304,9 @@ def _assert_state_equal(cat, golden):
     assert seen == golden.seen
     arts = {r["url"] for r in cat.read("articles").select("url").collect()}
     assert arts == {a["url"] for a in golden.articles}
+    got_seq = {r["url"]: r["seq"]
+               for r in read_frontier_full(cat).select("url", "seq").collect()}
+    assert got_seq == {e.url: e.seq for e in golden.entries.values()}
 
 
 def test_robots_blocking(spark, pages, policy, seeds_df, tmp_path):

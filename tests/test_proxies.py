@@ -28,11 +28,16 @@ class TestParsePayloads:
             '{"ip":"","port":80},'                   # empty ip -> dropped
             '{"ip":"6.6.6.6","port":""},'            # empty port -> dropped
             '{"protocol":"socks4","ip":"7.7.7.7","port":"81"}]}',
-        ]), id_cols=["pid"]).orderBy("pos").collect()
-        assert [(r.pos, r.proxy) for r in out] == [
-            (0, "socks5://1.2.3.4:1080"),
-            (1, "http://5.6.7.8:8080"),               # default protocol
-            (2, "socks4://7.7.7.7:81"),               # string port kept
+            # non-object elements are skipped alone (proxy_config.py:76)
+            '{"proxies":["junk",{"ip":"2.2.2.2","port":22},0,null,'
+            '[1],{"protocol":"https","ip":"3.3.3.3","port":"443"}]}',
+        ]), id_cols=["pid"]).orderBy("pid", "pos").collect()
+        assert [(r.pid, r.pos, r.proxy) for r in out] == [
+            (0, 0, "socks5://1.2.3.4:1080"),
+            (0, 1, "http://5.6.7.8:8080"),            # default protocol
+            (0, 2, "socks4://7.7.7.7:81"),            # string port kept
+            (1, 0, "http://2.2.2.2:22"),
+            (1, 1, "https://3.3.3.3:443"),
         ]
 
     def test_numeric_port_renders_as_decimal(self, spark):

@@ -132,6 +132,61 @@ class TestShardCatalog:
         assert ids == list(range(10)) + [42]
         assert cat.snapshot_delta_rowcount("t", s1) == 1
 
+    def test_metadata_is_write_once(self, spark, tmp_path, crawl_setup):
+        """Each commit adds exactly one ``snap-<n>.json`` and never
+        edits an earlier one; a stale ``.json.tmp`` of a crashed commit
+        is not a snapshot; a finished crawl leaves no whole-log or
+        pointer file anywhere in its warehouse."""
+        cat = SnapshotCatalog(spark, str(tmp_path / "t_wh"))
+        tdir = os.path.join(str(tmp_path / "t_wh"), "t")
+
+        def meta():
+            return {n: open(os.path.join(tdir, n), "rb").read()
+                    for n in os.listdir(tdir) if n.endswith(".json")}
+
+        df = spark.range(20).select(
+            "id", (F.col("id") % 4).cast("int").alias("b"))
+        one = spark.createDataFrame([(100, 1)], "id long, b int")
+        writes = [
+            lambda: cat.write_snapshot("t", df, shard_col="b"),
+            lambda: cat.write_snapshot("t", one, mode="append",
+                                       shard_col="b"),
+            lambda: cat.overwrite_shards("t", one, [1], "b"),
+            lambda: cat.write_snapshot("t", df, shard_col="b"),
+            lambda: cat.write_snapshot("t", one, mode="append",
+                                       shard_col="b"),
+            lambda: cat.overwrite_shards("t", one, [0, 1], "b"),
+        ]
+        seen: dict[str, bytes] = {}
+        for i, write in enumerate(writes):
+            sid = write()
+            now = meta()
+            assert sid == i
+            assert set(now) == set(seen) | {f"snap-{i}.json"}
+            assert all(now[n] == seen[n] for n in seen)
+            seen = now
+        # a crashed commit's tmp file is ignored, then overwritten
+        with open(os.path.join(tdir, f"snap-{len(writes)}.json.tmp"),
+                  "w") as f:
+            f.write('{"id": 99, "paths": ["/nonexistent"]')
+        assert cat.current_snapshot("t")["id"] == len(writes) - 1
+        assert cat.read("t").count() == 11
+        assert SnapshotCatalog(spark, str(tmp_path / "t_wh")).read(
+            "t").count() == 11
+        assert cat.write_snapshot("t", one) == len(writes)
+        assert cat.read("t").count() == 1
+
+        pages, policy, seeds = crawl_setup
+        wh = str(tmp_path / "crawl_wh")
+        crawl_cat = SnapshotCatalog(spark, wh)
+        CrawlEngine(spark, pages, policy, crawl_cat,
+                    CrawlConfig(use_bloom=True)).run(
+            read_seeds(spark, seeds), max_rounds=2)
+        assert crawl_cat.last_complete_round()["round"] >= 0
+        names = {n for _, _, files in os.walk(wh) for n in files}
+        assert not names & {"snapshots.json", "current.json",
+                            "rounds.json"}
+
 
 @pytest.fixture(scope="module")
 def crawl_setup(spark, tmp_path_factory):

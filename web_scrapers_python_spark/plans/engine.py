@@ -337,23 +337,21 @@ class CrawlEngine:
             .withColumn("retry_count", F.lit(0))
             .select(*FRONTIER_COLS)
         )
-        f = D.first_wins(f, "url_hash", "seq")
-        # seq is dense 0..n-1 after first-wins? No — first-wins keeps the
-        # original file-order seq, so max_seq must be measured, once.
+        f = D.first_wins(f, "url_hash", "seq").cache()
+        # first-wins keeps the original file-order seq (not dense), so
+        # max_seq is measured, once, and recorded in the frontier
+        # snapshot's properties so rounds never rescan the frontier.
         # frontier/archive/seen are shard-tracked from birth: pending by
         # host_bucket (round commits rewrite only touched buckets),
         # archive by terminal state (per-state round stats come from
         # parquet footers, no job), seen by host_bucket (rotating
         # per-group compaction).
-        fs = self.catalog.write_snapshot("frontier", f, {"round": -1},
-                                         shard_col="host_bucket")
+        max_seq = f.agg(F.max("seq")).collect()[0][0] or 0
+        fs = self.catalog.write_snapshot(
+            "frontier", f, {"round": -1, "max_seq": int(max_seq)},
+            shard_col="host_bucket")
+        f.unpersist()
         written = self.catalog.read("frontier")
-        max_seq = written.agg(F.max("seq")).collect()[0][0] or 0
-        # record max_seq in the snapshot properties so rounds never
-        # rescan the frontier for it
-        props = self.catalog.snapshot_properties("frontier", fs)
-        props["max_seq"] = int(max_seq)
-        self.catalog.set_snapshot_properties("frontier", fs, props)
         empty_archive = self.spark.createDataFrame([], written.schema)
         snaps = {"frontier": fs}
         snaps["frontier_archive"] = self.catalog.write_snapshot(
@@ -443,15 +441,12 @@ class CrawlEngine:
         if self.cfg.recrawl_ttl is None:
             return
         due_round = st.r - self.cfg.recrawl_ttl
-        due_entry = next((e for e in self.catalog.rounds()
-                          if e["round"] == due_round
-                          and "frontier_archive" in e["snapshots"]), None)
-        if due_entry is None or due_round < 0:
+        due = self.catalog.round_entry(due_round) if due_round >= 0 else None
+        if due is None:
             return
         cohort = st.cache(
             self.catalog.read_snapshot_delta(
-                "frontier_archive",
-                due_entry["snapshots"]["frontier_archive"])
+                "frontier_archive", due["snapshots"]["frontier_archive"])
             .where(F.col("state") == "fetched")
             .withColumn("state", F.lit("pending"))
             .withColumn("retry_count", F.lit(0))

@@ -9,37 +9,54 @@ its plan-time counts in the frontier snapshot's properties and
 parquet-footer row counts of the round's deltas.
 
 This sandbox ships no Iceberg runtime jar and has no network, so this
-module provides the same semantics over plain parquet:
+module provides the same semantics over plain parquet. Every file is
+written once and never edited:
 
-- one immutable data directory per table snapshot
-  (``<warehouse>/<table>/snap-<n>/``) — write-once, like Iceberg data
-  + manifest files;
-- an atomic pointer flip (``os.replace`` of ``current.json``) as the
-  commit — like the Iceberg catalog's metadata-pointer swap;
-- a snapshot log (``snapshots.json``) carrying per-snapshot lineage
-  properties (round, counts) — like Iceberg's snapshot summary;
-- ``commit_round`` groups multiple table snapshots under one round tag
-  so a crash between table writes is recoverable (rounds are replayed
-  from the last complete tag — write-ahead intent + idempotent replay);
-  a data dir orphaned by a crash before its log entry landed is
-  removed by the next write to that table.
+- ``<warehouse>/<table>/snap-<n>/`` — snapshot ``n``'s data dir (one
+  leaf dir per shard value for shard-tracked tables), written to
+  ``snap-<n>.tmp`` and renamed into place;
+- ``<warehouse>/<table>/snap-<n>.json`` — snapshot ``n``'s metadata
+  (``id``, ``paths``, ``properties``, ``shard_col``, ``committed_at``),
+  written to a ``.tmp`` file after the data dir's rename. The
+  ``os.replace`` of this file is the table commit: a data dir without
+  it holds no committed data, and the next write to the table (which
+  picks the same ``n``) removes it;
+- the highest committed ``n`` is the table's current snapshot and the
+  next write takes ``n + 1``, found by listing the table dir (once per
+  catalog; committed ids are dense, so later commits are found by
+  probing ``snap-<n+1>.json``) — no pointer file, no log rewritten per
+  write. A lookup by id reads one small file, memoized per catalog
+  (the files are immutable);
+- ``<warehouse>/_rounds/<r>.json`` — ``commit_round`` records the
+  per-table snapshot ids of round ``r`` the same way; the highest ``r``
+  is the last complete round. A crash anywhere before that file lands
+  leaves committed-but-unreferenced table snapshots, and resume
+  replays round ``r`` against the previous round's pinned ids.
 
-On a real cluster every call maps 1:1 onto Iceberg:
-``write_snapshot`` → ``df.writeTo(tbl).overwritePartitions()`` /
-``append()``; ``read(snapshot_id=k)`` → ``VERSION AS OF``;
-``commit_round`` → a single multi-table transaction (or per-table
-snapshots + the round tag in snapshot properties, as here).
+This is Iceberg's file-system table layout
+(https://iceberg.apache.org/spec/#file-system-tables): each version is
+a new ``v<N>.metadata.json`` committed by an atomic rename and the
+highest committed ``N`` is current. On a real cluster every call maps
+1:1 onto Iceberg: ``write_snapshot`` →
+``df.writeTo(tbl).overwritePartitions()`` / ``append()``;
+``read(snapshot_id=k)`` → ``VERSION AS OF``; ``commit_round`` → a single
+multi-table transaction (or per-table snapshots + the round tag in
+snapshot properties, as here).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import time
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+
+_SNAP_META = re.compile(r"snap-(\d+)\.json")
+_ROUND_META = re.compile(r"(-?\d+)\.json")
 
 
 class SnapshotCatalog:
@@ -47,6 +64,9 @@ class SnapshotCatalog:
         self.spark = spark
         self.warehouse = warehouse
         os.makedirs(warehouse, exist_ok=True)
+        self._entries: dict[tuple[str, int], dict[str, Any]] = {}
+        self._current: dict[str, int] = {}
+        self._rowcount_memo: dict[str, int] = {}
         # A shard-tracked snapshot is read as hundreds-to-thousands of
         # leaf-dir root paths; above 32 paths Spark launches a
         # DISTRIBUTED file-listing job (one task per path — measured as
@@ -63,31 +83,55 @@ class SnapshotCatalog:
     def _tdir(self, table: str) -> str:
         return os.path.join(self.warehouse, table)
 
-    def _pointer(self, table: str) -> str:
-        return os.path.join(self._tdir(table), "current.json")
+    def _rdir(self) -> str:
+        return os.path.join(self.warehouse, "_rounds")
 
-    def _log(self, table: str) -> str:
-        return os.path.join(self._tdir(table), "snapshots.json")
-
-    # -- snapshot log ------------------------------------------------------
-    def snapshots(self, table: str) -> list[dict[str, Any]]:
+    @staticmethod
+    def _max_committed(dirpath: str, pattern: re.Pattern) -> int | None:
+        """Highest id among the committed metadata files of a dir
+        (``.tmp`` leftovers of a crashed write never match)."""
         try:
-            with open(self._log(table)) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return []
-
-    def current_snapshot(self, table: str) -> dict[str, Any] | None:
-        try:
-            with open(self._pointer(table)) as f:
-                return json.load(f)
+            names = os.listdir(dirpath)
         except FileNotFoundError:
             return None
+        return max((int(m.group(1)) for m in map(pattern.fullmatch, names)
+                    if m), default=None)
+
+    # -- snapshot metadata ---------------------------------------------------
+    def _entry(self, table: str, snapshot_id: int) -> dict[str, Any]:
+        key = (table, snapshot_id)
+        if key not in self._entries:
+            path = os.path.join(self._tdir(table), f"snap-{snapshot_id}.json")
+            try:
+                with open(path) as f:
+                    self._entries[key] = json.load(f)
+            except FileNotFoundError:
+                raise FileNotFoundError(
+                    f"{table}: no snapshot {snapshot_id}") from None
+        return self._entries[key]
+
+    def _current_id(self, table: str) -> int | None:
+        """Highest committed snapshot id. Committed ids are dense (a
+        write takes the highest + 1), so after one listing per catalog
+        a newer commit, by any writer, is found by probing forward."""
+        cur = self._current.get(table)
+        if cur is None:
+            cur = self._max_committed(self._tdir(table), _SNAP_META)
+            if cur is None:
+                return None
+        while os.path.exists(
+                os.path.join(self._tdir(table), f"snap-{cur + 1}.json")):
+            cur += 1
+        self._current[table] = cur
+        return cur
+
+    def current_snapshot(self, table: str) -> dict[str, Any] | None:
+        cur = self._current_id(table)
+        return None if cur is None else self._entry(table, cur)
 
     # -- write path ----------------------------------------------------------
     def write_snapshot(self, table: str, df: DataFrame,
                        properties: dict[str, Any] | None = None,
-                       partition_by: list[str] | None = None,
                        mode: str = "overwrite",
                        base_snapshot_id: int | None = None,
                        shard_col: str | None = None) -> int:
@@ -109,20 +153,11 @@ class SnapshotCatalog:
         via :meth:`read_shards`. The shard column stays a regular data
         column in the files (the partition dir key is a shadow ``_pb``),
         so reads are byte-identical to unsharded snapshots."""
-        data_dir, leafs = self._write_data(table, df, shard_col)
-        new_paths = leafs if shard_col is not None else [data_dir]
-        snaps = self.snapshots(table)
-        paths = list(new_paths)
-        if mode == "append" and snaps:
-            if base_snapshot_id is None:
-                paths = snaps[-1]["paths"] + paths
-            elif base_snapshot_id >= 0:
-                paths = self._paths_of(table, base_snapshot_id) + paths
-            # base_snapshot_id == -1: fresh lineage, carry nothing (the
-            # caller knows no committed base exists — e.g. replaying the
-            # first round after a crash left an orphaned snapshot)
-        return self._commit_snapshot(table, data_dir, paths, properties,
-                                     shard_col)
+        base = (self._base_paths(table, base_snapshot_id)
+                if mode == "append" else [])
+        snap_id, leafs = self._write_data(table, df, shard_col)
+        return self._commit_snapshot(table, snap_id, base + leafs,
+                                     properties, shard_col)
 
     def overwrite_shards(self, table: str, df: DataFrame,
                          touched: list, shard_col: str,
@@ -144,12 +179,7 @@ class SnapshotCatalog:
         rest of the table is untouched (amortized ``rewrite_data_files``,
         no full-table stall)."""
         touched_keys = {str(v) for v in touched}
-        if base_snapshot_id is None:
-            base = (self.current_snapshot(table) or {}).get("paths", [])
-        elif base_snapshot_id >= 0:
-            base = self._paths_of(table, base_snapshot_id)
-        else:
-            base = []   # -1: fresh lineage (no committed base exists)
+        base = self._base_paths(table, base_snapshot_id)
         for p in base:
             if self._shard_value(p) is None and self._dir_rowcount(p) > 0:
                 raise ValueError(
@@ -159,25 +189,38 @@ class SnapshotCatalog:
                     "rewrite the table with shard_col first")
         carried = [p for p in base if self._shard_value(p) is not None
                    and self._shard_value(p) not in touched_keys]
-        data_dir, leafs = self._write_data(table, df, shard_col)
-        return self._commit_snapshot(table, data_dir, carried + leafs,
+        snap_id, leafs = self._write_data(table, df, shard_col)
+        return self._commit_snapshot(table, snap_id, carried + leafs,
                                      properties, shard_col)
 
+    def _base_paths(self, table: str, base_snapshot_id: int | None
+                    ) -> list[str]:
+        """Paths a new snapshot carries: the current snapshot's
+        (``None``), the pinned one's, or none (``-1``: fresh lineage —
+        the caller knows no committed base exists, e.g. replaying the
+        first round after a crash)."""
+        if base_snapshot_id is None:
+            return (self.current_snapshot(table) or {}).get("paths", [])
+        if base_snapshot_id < 0:
+            return []
+        return self._paths_of(table, base_snapshot_id)
+
     def _write_data(self, table: str, df: DataFrame,
-                    shard_col: str | None) -> tuple[str, list[str]]:
+                    shard_col: str | None) -> tuple[int, list[str]]:
         """Write df into the table's next ``snap-<n>`` dir (atomic via
-        tmp-dir + rename). Returns (data_dir, leaf shard dirs)."""
+        tmp-dir + rename). Returns (n, the snapshot's new paths: the
+        data dir, or its leaf shard dirs)."""
         from pyspark.sql import functions as F
         tdir = self._tdir(table)
         os.makedirs(tdir, exist_ok=True)
-        snaps = self.snapshots(table)
-        snap_id = (snaps[-1]["id"] + 1) if snaps else 0
+        cur = self._current_id(table)
+        snap_id = 0 if cur is None else cur + 1
         data_dir = os.path.join(tdir, f"snap-{snap_id}")
         tmp_dir = data_dir + ".tmp"
         # leftovers of a crash: a stale tmp dir, or a snap-<n> dir renamed
-        # into place whose snapshot never reached the log (ids come from
-        # the log, so nothing references it). Either would block the
-        # write; neither holds committed data.
+        # into place whose metadata file never landed (so nothing
+        # references it). Either would block the write; neither holds
+        # committed data.
         for stale in (tmp_dir, data_dir):
             if os.path.exists(stale):
                 shutil.rmtree(stale)
@@ -199,21 +242,22 @@ class SnapshotCatalog:
         else:
             writer.write.mode("overwrite").parquet(tmp_dir)
         os.replace(tmp_dir, data_dir)  # data visible only after rename
-        leafs = []
-        if shard_col is not None:
-            leafs = sorted(
-                os.path.join(data_dir, d) for d in os.listdir(data_dir)
-                if d.startswith("_pb="))
-            if not leafs:
-                # empty sharded write: keep one schema-bearing (empty)
-                # path so delta reads of this snapshot stay well-formed
-                leafs = [self._write_empty_fallback(data_dir, df)]
-        return data_dir, leafs
+        if shard_col is None:
+            return snap_id, [data_dir]
+        leafs = sorted(
+            os.path.join(data_dir, d) for d in os.listdir(data_dir)
+            if d.startswith("_pb="))
+        if not leafs:
+            # empty sharded write: keep one schema-bearing (empty)
+            # path so delta reads of this snapshot stay well-formed
+            leafs = [self._write_empty_fallback(data_dir, df)]
+        return snap_id, leafs
 
-    def _commit_snapshot(self, table: str, data_dir: str, paths: list[str],
+    def _commit_snapshot(self, table: str, snap_id: int, paths: list[str],
                          properties: dict[str, Any] | None,
                          shard_col: str | None) -> int:
-        snap_id = int(os.path.basename(data_dir).split("-", 1)[1])
+        """THE table commit: snapshot ``snap_id``'s metadata file lands
+        by atomic rename, after its data dir's."""
         entry = {
             "id": snap_id,
             "paths": paths,
@@ -222,10 +266,8 @@ class SnapshotCatalog:
         }
         if shard_col is not None:
             entry["shard_col"] = shard_col
-        snaps = self.snapshots(table)
-        snaps.append(entry)
-        self._atomic_json(self._log(table), snaps)
-        self._atomic_json(self._pointer(table), entry)  # the commit
+        self._atomic_json(
+            os.path.join(self._tdir(table), f"snap-{snap_id}.json"), entry)
         return snap_id
 
     @staticmethod
@@ -245,47 +287,25 @@ class SnapshotCatalog:
     def _atomic_json(path: str, obj: Any) -> None:
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
-            json.dump(obj, f, indent=1)
+            f.write(json.dumps(obj))
         os.replace(tmp, path)
 
-    def _paths_of(self, table: str, snapshot_id: int) -> list[str]:
-        for s in self.snapshots(table):
-            if s["id"] == snapshot_id:
-                return s["paths"]
-        raise FileNotFoundError(f"{table}: no snapshot {snapshot_id}")
+    def _paths_of(self, table: str, snapshot_id: int | None) -> list[str]:
+        """A snapshot's data paths; ``None`` = the current snapshot."""
+        if snapshot_id is not None:
+            return self._entry(table, snapshot_id)["paths"]
+        cur = self.current_snapshot(table)
+        if cur is None:
+            raise FileNotFoundError(f"table {table} has no snapshot")
+        return cur["paths"]
 
     # -- read path -----------------------------------------------------------
     def read(self, table: str, snapshot_id: int | None = None) -> DataFrame:
         """Read current snapshot, or time-travel (`VERSION AS OF`)."""
-        if snapshot_id is None:
-            cur = self.current_snapshot(table)
-            if cur is None:
-                raise FileNotFoundError(f"table {table} has no snapshot")
-            return self.spark.read.parquet(*cur["paths"])
         return self.spark.read.parquet(*self._paths_of(table, snapshot_id))
 
     def snapshot_properties(self, table: str, snapshot_id: int) -> dict:
-        for s in self.snapshots(table):
-            if s["id"] == snapshot_id:
-                return s.get("properties", {})
-        raise FileNotFoundError(f"{table}: no snapshot {snapshot_id}")
-
-    def set_snapshot_properties(self, table: str, snapshot_id: int,
-                                properties: dict) -> None:
-        """Replace a snapshot's properties (Iceberg: snapshot summary /
-        table-property update — metadata only, no data rewrite)."""
-        snaps = self.snapshots(table)
-        for s in snaps:
-            if s["id"] == snapshot_id:
-                s["properties"] = properties
-                break
-        else:
-            raise FileNotFoundError(f"{table}: no snapshot {snapshot_id}")
-        self._atomic_json(self._log(table), snaps)
-        cur = self.current_snapshot(table)
-        if cur and cur["id"] == snapshot_id:
-            cur["properties"] = properties
-            self._atomic_json(self._pointer(table), cur)
+        return self._entry(table, snapshot_id)["properties"]
 
     def _delta_paths(self, table: str, snapshot_id: int) -> list[str]:
         """The data paths WRITTEN by this snapshot (excluding carried
@@ -309,14 +329,7 @@ class SnapshotCatalog:
         analog). Unsharded dirs in a mixed lineage are always included:
         they may hold any shard's rows."""
         keys = {str(v) for v in shards}
-        if snapshot_id is None:
-            cur = self.current_snapshot(table)
-            if cur is None:
-                raise FileNotFoundError(f"table {table} has no snapshot")
-            paths = cur["paths"]
-        else:
-            paths = self._paths_of(table, snapshot_id)
-        return [p for p in paths
+        return [p for p in self._paths_of(table, snapshot_id)
                 if self._shard_value(p) is None or self._shard_value(p) in keys]
 
     def read_shards(self, table: str, shards: list,
@@ -332,8 +345,6 @@ class SnapshotCatalog:
     def _dir_rowcount(self, d: str) -> int:
         """Row count of one immutable data dir from parquet footers,
         driver-side, memoized (no Spark job)."""
-        if not hasattr(self, "_rowcount_memo"):
-            self._rowcount_memo: dict[str, int] = {}
         if d not in self._rowcount_memo:
             import pyarrow.parquet as pq
             self._rowcount_memo[d] = sum(
@@ -416,21 +427,31 @@ class SnapshotCatalog:
     def commit_round(self, round_no: int,
                      table_snapshots: dict[str, int]) -> None:
         """Record that round `round_no` committed the given per-table
-        snapshot ids. A round is durable only once this pointer lands;
+        snapshot ids. A round is durable only once this file lands;
         resume replays from the latest complete round."""
-        rounds_path = os.path.join(self.warehouse, "rounds.json")
-        rounds = self.rounds()
-        rounds.append({"round": round_no, "snapshots": table_snapshots,
-                       "committed_at": time.time()})
-        self._atomic_json(rounds_path, rounds)
+        os.makedirs(self._rdir(), exist_ok=True)
+        self._atomic_json(
+            os.path.join(self._rdir(), f"{round_no}.json"),
+            {"round": round_no, "snapshots": table_snapshots,
+             "committed_at": time.time()})
+
+    def round_entry(self, round_no: int) -> dict[str, Any] | None:
+        """Round ``round_no``'s commit record, or None if it never
+        committed."""
+        try:
+            with open(os.path.join(self._rdir(), f"{round_no}.json")) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return None
 
     def rounds(self) -> list[dict[str, Any]]:
         try:
-            with open(os.path.join(self.warehouse, "rounds.json")) as f:
-                return json.load(f)
+            names = os.listdir(self._rdir())
         except FileNotFoundError:
             return []
+        return [self.round_entry(r) for r in sorted(
+            int(m.group(1)) for m in map(_ROUND_META.fullmatch, names) if m)]
 
     def last_complete_round(self) -> dict[str, Any] | None:
-        rounds = self.rounds()
-        return rounds[-1] if rounds else None
+        last = self._max_committed(self._rdir(), _ROUND_META)
+        return None if last is None else self.round_entry(last)

@@ -11,7 +11,8 @@ here:
   (proxy_config.py:69-85). A payload is either a dict with a
   ``proxies`` array of ``{protocol, ip, port}`` records (protocol
   defaults to "http" when the key is absent; records with a missing or
-  empty ip or port are dropped) or a bare JSON array of proxy strings (falsy
+  empty ip or port are dropped, and so is any element that is not an
+  object, alone — :76) or a bare JSON array of proxy strings (falsy
   entries dropped, :82-84). Each kept record becomes
   ``proto://ip:port``. A payload that parses as neither shape yields
   no rows — the reference returns ``[]`` on a decode error (:86-88).
@@ -42,10 +43,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# struct-typed twin of the ProxyScrape v4 response body the reference
-# decodes at proxy_config.py:69-81
-_DICT_SCHEMA = ("struct<proxies:array<struct<"
-                "protocol:string,ip:string,port:string>>>")
+# the ProxyScrape v4 response body the reference decodes at
+# proxy_config.py:69-81: the ``proxies`` array is decoded element-wise
+# (each element's raw JSON text, then the record struct), so a
+# non-object element fails alone, like the reference's isinstance skip
+_DICT_SCHEMA = "struct<proxies:array<string>>"
+_RECORD_SCHEMA = "struct<protocol:string,ip:string,port:string>"
 _LIST_SCHEMA = "array<string>"
 
 
@@ -78,8 +81,10 @@ def parse_proxy_payloads(payloads: DataFrame, payload_col: str = "payload",
     JVM-side; no Python touches the payload bytes."""
     dicts = F.from_json(F.col(payload_col), _DICT_SCHEMA)["proxies"]
     lists = F.from_json(F.col(payload_col), _LIST_SCHEMA)
-    from_dicts = F.filter(F.transform(dicts, _format_record),
-                          lambda s: s.isNotNull())
+    from_dicts = F.filter(
+        F.transform(dicts, lambda e: _format_record(
+            F.from_json(e, _RECORD_SCHEMA))),
+        lambda s: s.isNotNull())
     # direct list of proxy strings: keep truthy entries only
     # (proxy_config.py:82-84 ``if proxy`` drops '' and nulls)
     from_lists = F.filter(
