@@ -222,16 +222,16 @@ class _Crash(RuntimeError):
     pass
 
 
-def _crash_frontier_commit(monkeypatch, cat):
-    """Round 1's ``frontier`` table commit raises inside the parallel
-    write pool (its data dir is already renamed into place); the
-    weibo, quarantine and history+seen tasks still commit."""
+def _crash_commit(monkeypatch, cat, table):
+    """The crashed round's ``table`` commit raises inside the parallel
+    write pool (its data dir is already renamed into place); every
+    write before it on its task, and the other tasks, still commit."""
     commit = cat._commit_snapshot
 
-    def failing(table, *args, **kwargs):
-        if table == "frontier":
-            raise _Crash("frontier commit")
-        return commit(table, *args, **kwargs)
+    def failing(name, *args, **kwargs):
+        if name == table:
+            raise _Crash(f"{table} commit")
+        return commit(name, *args, **kwargs)
 
     monkeypatch.setattr(cat, "_commit_snapshot", failing)
 
@@ -245,48 +245,69 @@ def _crash_round_commit(monkeypatch, cat):
     monkeypatch.setattr(cat, "commit_round", failing)
 
 
+def _snap_id(cat, table):
+    """Current snapshot id of ``table``; -1 before its first write."""
+    return (cat.current_snapshot(table) or {"id": -1})["id"]
+
+
+# crash point → the table whose commit raises (None: no table fails)
+_CRASH_TABLES = {"frontier_commit": "frontier",
+                 "archive_commit": "frontier_archive",
+                 "seen_filters_commit": "seen_filters",
+                 "round_commit": None}
+
+
 @pytest.mark.parametrize("crash", ["orphaned_dirs", "frontier_commit",
+                                   "archive_commit", "seen_filters_commit",
                                    "round_commit"])
 def test_resume_from_snapshot_identity(spark, pages, policy, seeds_df,
                                        golden, tmp_path, monkeypatch, crash):
-    """Kill after round k, and again inside round k+1 — with orphaned
-    data dirs and no round commit, with one parallel table commit
-    failing while the others land, or with every table committed but
-    no round commit; resume from the snapshot catalog → final state
-    identical to the uninterrupted run (E5)."""
+    """Kill after round k-1, and again inside round k — with orphaned
+    data dirs and no round commit, with one table commit failing while
+    the others land (``frontier``; ``frontier_archive`` after the
+    ``frontier`` shard overwrite on the same task; ``seen_filters``
+    after ``seen``, bloom on), or with every table committed but no
+    round commit; resume from the snapshot catalog → final state
+    identical to the uninterrupted run (E5). The filters are only
+    written in a round that discovers links — round 0 on this corpus —
+    so ``seen_filters_commit`` crashes inside round 0, the others
+    inside round 1."""
+    bloom = crash == "seen_filters_commit"
+    cfg, k = CrawlConfig(use_bloom=bloom), 0 if bloom else 1
     wh = tmp_path / "wh"
     cat = SnapshotCatalog(spark, str(wh))
-    eng = CrawlEngine(spark, pages, policy, cat, CrawlConfig())
-    eng.run(seeds_df, max_rounds=1)  # bootstrap + round 0, then 'crash'
-    if crash == "orphaned_dirs":     # crash inside round 1
-        _tear_round(cat, 1)
+    eng = CrawlEngine(spark, pages, policy, cat, cfg)
+    eng.run(seeds_df, max_rounds=k)  # bootstrap + rounds < k, then 'crash'
+    if crash == "orphaned_dirs":     # crash inside round k
+        _tear_round(cat, k)
     else:
+        failed = _CRASH_TABLES[crash]
+        tables = {"frontier", "seen", "articles"} | ({failed} - {None})
         with monkeypatch.context() as m:
-            (_crash_frontier_commit if crash == "frontier_commit"
-             else _crash_round_commit)(m, cat)
-            before = {t: cat.current_snapshot(t)["id"]
-                      for t in ("frontier", "seen", "articles")}
+            if failed is None:
+                _crash_round_commit(m, cat)
+            else:
+                _crash_commit(m, cat, failed)
+            before = {t: _snap_id(cat, t) for t in tables}
             with pytest.raises(_Crash):
-                eng.run_round(1)
-        after = {t: cat.current_snapshot(t)["id"]
-                 for t in ("frontier", "seen", "articles")}
-        # the crash landed mid-round: the other tables committed
-        assert after["seen"] > before["seen"]
-        assert after["articles"] > before["articles"]
-        assert (after["frontier"] > before["frontier"]) == (
-            crash == "round_commit")
-    assert cat.last_complete_round()["round"] == 0
+                eng.run_round(k)
+        after = {t: _snap_id(cat, t) for t in tables}
+        # the crash landed mid-round: every table but the failed one
+        # committed
+        assert {t for t in tables if after[t] > before[t]} \
+            == tables - {failed}
+    assert cat.last_complete_round()["round"] == k - 1
 
     # new engine + new catalog object over the same warehouse = resume
     cat2 = SnapshotCatalog(spark, str(wh))
-    eng2 = CrawlEngine(spark, pages, policy, cat2, CrawlConfig())
+    eng2 = CrawlEngine(spark, pages, policy, cat2, cfg)
     metrics2 = eng2.run(seeds=None, max_rounds=30)
 
-    # stitch: round 0 from first run + rest from resume
+    # stitch: rounds < k from first run + rest from resume
     m0 = [r for r in cat2.rounds() if r["round"] == 0]
-    assert m0, "round 0 must be committed before the crash"
-    assert metrics2[0]["round"] == 1
-    combined = [{"round": 0}] + metrics2
+    assert m0, "round 0 must be committed"
+    assert metrics2[0]["round"] == k
+    combined = [{"round": r} for r in range(k)] + metrics2
     assert len(combined) == len(golden.rounds)
     _assert_state_equal(cat2, golden)
     # every committed round, replayed one included, did the simulator's

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from web_scrapers_python_spark.functions import urls as U
 from web_scrapers_python_spark.operators.parse import (
-    add_ai_analysis, parse_articles, parse_weibo_udf,
+    parse_articles, parse_weibo_full_udf,
 )
 from web_scrapers_python_spark.oracle import extract as ox
 from web_scrapers_python_spark.oracle import reference as ref
@@ -34,7 +34,7 @@ def test_generic_news_text_byte_parity(spark, pages):
     """UDF content == generator text for every generic-news page."""
     df = pages.withColumn("parser", U.select_parser_id(F.col("url")))
     news = df.where(F.col("parser") == "generic-news")
-    parsed = parse_articles(news)
+    parsed = parse_articles(news, analyze=True)
     cmp = (
         news.select("url", "text")
         .join(parsed.select("url", "content"), "url", "left")
@@ -52,7 +52,7 @@ def test_weibo_text_byte_parity(spark, pages):
     assert n > 3  # ~5% of corpus
     got = weibo.select(
         "url", "text",
-        parse_weibo_udf(F.col("html"), F.col("url")).alias("p"),
+        parse_weibo_full_udf(F.col("html"), F.col("url")).alias("p"),
     ).collect()
     for r in got:
         want = r["text"]
@@ -65,7 +65,8 @@ def test_parse_full_field_parity_vs_oracle(spark, pages):
     oracle run driver-side over the same html."""
     df = pages.withColumn("parser", U.select_parser_id(F.col("url")))
     news = df.where(F.col("parser") == "generic-news")
-    parsed = {r["url"]: r for r in parse_articles(news).collect()}
+    parsed = {r["url"]: r
+              for r in parse_articles(news, analyze=True).collect()}
     raw = news.select("url", "html").collect()
     n_ok = 0
     for r in raw:
@@ -87,9 +88,11 @@ def test_parse_full_field_parity_vs_oracle(spark, pages):
 
 
 def test_ai_analysis_matches_oracle(spark, pages):
+    """The fused ``ai_analysis`` column equals the reference analyzer
+    run driver-side over the parsed title and content."""
     df = pages.withColumn("parser", U.select_parser_id(F.col("url")))
     news = df.where(F.col("parser") == "generic-news").limit(80)
-    enhanced = add_ai_analysis(parse_articles(news)).collect()
+    enhanced = parse_articles(news, analyze=True).collect()
     assert len(enhanced) > 20
     for r in enhanced:
         a = r["ai_analysis"]
@@ -117,47 +120,50 @@ def test_no_title_pages_rejected(spark, pages):
     df = pages.withColumn("parser", U.select_parser_id(F.col("url")))
     parsed_urls = {
         r["url"] for r in
-        parse_articles(df.where(F.col("parser") == "generic-news"))
+        parse_articles(df.where(F.col("parser") == "generic-news"),
+                       analyze=True)
         .select("url").collect()
     }
     assert not (set(none_urls) & parsed_urls)
 
 
-def test_weibo_full_udf_single_dispatch_parity(spark, pages):
-    """The fused full-struct weibo UDF must equal the two separate UDFs
-    (article view == parse_weibo_analyzed_udf fields, post fields ==
-    parse_weibo_udf) on every weibo page — the single-Arrow-pass
-    contract the engine relies on."""
-    from web_scrapers_python_spark.operators.parse import (
-        parse_weibo_analyzed_udf, parse_weibo_full_udf)
-
+def test_weibo_full_udf_oracle_parity(spark, pages):
+    """The engine's weibo UDF equals the oracle on every weibo page: the
+    article view (title-less post, ``ref.extract_domain`` source, the
+    reference analysis of its content) and the WeiboPost fields, in the
+    one Arrow pass both sinks read."""
     df = pages.withColumn("parser", U.select_parser_id(F.col("url")))
     weibo = df.where(F.col("parser") == "weibo")
     rows = weibo.select(
-        "url",
+        "url", "html",
         parse_weibo_full_udf(F.col("html"), F.col("url")).alias("full"),
-        parse_weibo_analyzed_udf(F.col("html"), F.col("url")).alias("art"),
-        parse_weibo_udf(F.col("html"), F.col("url")).alias("post"),
     ).collect()
     assert len(rows) > 3
-    art_fields = ("title", "author", "published_at", "description",
-                  "content", "image", "source", "ok", "ai_analysis")
+    n_ok = 0
     for r in rows:
-        for f in art_fields:
-            assert r["full"][f] == r["art"][f], (r["url"], f)
-        assert r["full"]["post_id"] == r["post"]["id"], r["url"]
+        got = r["full"]
+        want = ox.parse_weibo(bytes(r["html"]), r["url"])
+        if want is None:
+            assert got["ok"] is None, r["url"]
+            assert all(got[f] is None for f in got.asDict()), r["url"]
+            continue
+        n_ok += 1
+        assert got["ok"] == "ok", r["url"]
+        for f in ("title", "published_at", "description", "image"):
+            assert got[f] is None, (r["url"], f)
+        assert got["source"] == ref.extract_domain(r["url"]), r["url"]
+        assert got["post_id"] == want["id"], r["url"]
         for f in ("author", "content", "likes", "reposts", "comments"):
-            assert r["full"][f if f != "author" else "author"] == \
-                r["post"][f], (r["url"], f)
+            assert got[f] == want[f], (r["url"], f)
+        assert got["ai_analysis"].asDict() == \
+            ref.analyze(None, want["content"]), r["url"]
+    assert n_ok > 3
 
 
 def test_weibo_single_pass_plan(spark, pages):
     """Engine-shaped weibo pipeline: the posts view must read the
     cached fused-UDF output (InMemoryTableScan), never re-evaluate a
     parse UDF — one weibo UDF invocation per row across both sinks."""
-    from web_scrapers_python_spark.operators.parse import (
-        parse_weibo_full_udf)
-
     df = (pages.withColumn("parser", U.select_parser_id(F.col("url")))
           .withColumn("url_hash", U.canonical_url_hash(F.col("url"))))
     weibo_full = (df.where(F.col("parser") == "weibo")

@@ -15,15 +15,13 @@ from __future__ import annotations
 
 import hashlib
 import math
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType, BooleanType, IntegerType, LongType, StringType, StructField,
-    StructType,
+    BinaryType, BooleanType, IntegerType, LongType, StructField, StructType,
 )
 
 
@@ -176,41 +174,50 @@ def dedup_against_seen(candidates: DataFrame, seen: DataFrame,
                        key: str = "url_hash",
                        bucket_col: str = "host_bucket",
                        flag_col: str | None = None) -> DataFrame:
-    """J1 at scale: bloom split, then exact anti-join on suspects only.
+    """J1 at scale: bloom split, then an exact check on suspects only.
 
     A bloom miss proves the key was never seen → the row bypasses the
-    expensive anti-join entirely. A bloom hit (true hit or FP) goes
-    through the exact anti-join, which removes every truly-seen row.
-    The composite is therefore exactly the reference's exact dedup for
-    ANY filter content — only the join's input volume changes.
+    exact check entirely. A bloom hit (true hit or FP) goes through the
+    exact check, which catches every truly-seen row. The composite is
+    therefore exactly the reference's exact dedup (``anti_join_seen``)
+    for ANY filter content — only the join's input volume changes.
+    Without filters every candidate is a suspect.
 
     ``flag_col``: instead of filtering, return EVERY candidate row with
     a boolean ``flag_col`` (true = unseen). Lets the caller keep one
     cached frame serving both the fresh rows and the all-candidates
     aggregates (the crawl engine fuses its links-discovered count into
-    the sequencer's planning pass this way). The confirmed-hit key set
-    is O(round delta) — true dups plus bloom FPs — so the extra
-    distinct+left-join stays delta-sized; ``seen`` is still scanned
-    once (one pruned column) and never shuffled."""
-    if flag_col is not None:
-        return _flag_against_seen(candidates, seen, filters, key,
-                                  bucket_col, flag_col)
+    the sequencer's planning pass this way). Without it the result is
+    the flagged frame filtered on the flag."""
+    flag = flag_col or "_unseen"
     if filters is None:
-        return anti_join_seen(candidates, seen, key)
-    flagged = _bloom_maybe(candidates, filters, key, bucket_col)
-    definite_new = flagged.where(~F.col("_maybe")).drop("_maybe")
-    suspects = flagged.where(F.col("_maybe")).drop("_maybe")
+        definite_new, suspects = None, candidates
+    else:
+        flagged = _bloom_maybe(candidates, filters, key, bucket_col)
+        definite_new = flagged.where(~F.col("_maybe")).drop("_maybe")
+        suspects = flagged.where(F.col("_maybe")).drop("_maybe")
     # Exact check, seen-side-shuffle-free: a direct suspects-anti-seen
     # would sort-merge BOTH sides — an O(seen) shuffle every round. The
     # suspect set is round-delta-sized (true dups + bloom FPs), so flip
     # it: stream the seen scan against the (AQE-broadcast-able) suspect
-    # key set to get the confirmed hits, then anti-join those back.
+    # key set to get the confirmed hits, then left-join those back.
     # seen is scanned (one pruned column) but never shuffled; no
     # explicit broadcast hint, so an oversized suspect set degrades to
-    # SMJ instead of OOMing the driver.
-    hits = seen.select(key).join(suspects.select(key), key, "left_semi")
-    confirmed_new = suspects.join(hits, key, "left_anti")
-    return definite_new.unionByName(confirmed_new)
+    # SMJ instead of OOMing the driver. distinct keeps the join from
+    # multiplying candidates when the seen event log repeats a key.
+    hits = (seen.select(key)
+            .join(suspects.select(key), key, "left_semi")
+            .distinct())
+    marked = (
+        suspects.join(hits.withColumn("_seen", F.lit(True)), key, "left")
+        .withColumn(flag, F.col("_seen").isNull())
+        .drop("_seen")
+    )
+    if definite_new is not None:
+        marked = definite_new.withColumn(flag, F.lit(True)).unionByName(marked)
+    if flag_col is None:
+        return marked.where(F.col(flag)).drop(flag)
+    return marked
 
 
 def _bloom_maybe(candidates: DataFrame, filters: DataFrame,
@@ -247,31 +254,3 @@ def _bloom_maybe(candidates: DataFrame, filters: DataFrame,
         ),
     ).select(*candidates.columns, "_maybe")
 
-
-def _flag_against_seen(candidates: DataFrame, seen: DataFrame,
-                       filters: DataFrame | None, key: str,
-                       bucket_col: str, flag_col: str) -> DataFrame:
-    """Flag-mode dedup: same split as dedup_against_seen, but seen rows
-    are MARKED (flag false) instead of dropped. The confirmed-hit set
-    (true dups + bloom FPs, O(round delta)) is distinct'd and LEFT-
-    joined back — distinct keeps the join from multiplying candidates
-    when the seen event log carries a key more than once."""
-    if filters is None:
-        suspects = candidates
-        definite_new = None
-    else:
-        flagged = _bloom_maybe(candidates, filters, key, bucket_col)
-        definite_new = flagged.where(~F.col("_maybe")).drop("_maybe")
-        suspects = flagged.where(F.col("_maybe")).drop("_maybe")
-    hits = (seen.select(key)
-            .join(suspects.select(key), key, "left_semi")
-            .distinct())
-    marked = (
-        suspects.join(hits.withColumn("_seen", F.lit(True)), key, "left")
-        .withColumn(flag_col, F.col("_seen").isNull())
-        .drop("_seen")
-    )
-    if definite_new is not None:
-        marked = definite_new.withColumn(
-            flag_col, F.lit(True)).unionByName(marked)
-    return marked

@@ -51,21 +51,13 @@ def _lex_ge(cols: list[Column], vals: tuple) -> Column:
 
 def assign_global_seq(df: DataFrame, order_by: list[str], start: int = 0,
                       out_col: str = "seq",
-                      num_partitions: int | None = None,
-                      with_count: bool = False,
                       gate_col: str | None = None,
                       set_col: str | None = None):
     """Add ``out_col`` = start + 0-based dense rank of the row in the
     global (order_by) ordering. order_by must be a unique, non-null
     composite key for determinism. The result is safe to re-evaluate
-    (all plan inputs are frozen literals).
-
-    ``with_count=True`` returns ``(df, n)`` — the input row count falls
-    out of the planning pass for free, and callers that would otherwise
-    run their own count() save one job barrier (they add up: driver
-    round-trips dominate short rounds, especially on real executors).
-    Planning is two driver jobs total: one fused count+bound-sample
-    aggregate, one per-bucket count.
+    (all plan inputs are frozen literals). Planning is two driver jobs
+    total: one fused count+bound-sample aggregate, one per-bucket count.
 
     ``gate_col`` fuses a caller-side filter INTO the planning pass:
     only rows where the boolean ``gate_col`` is true are sequenced and
@@ -80,7 +72,7 @@ def assign_global_seq(df: DataFrame, order_by: list[str], start: int = 0,
     collect_set'd per input partition and unioned driver-side:
     bounded at O(parts * |domain|) — fine for host_bucket (<= 1024
     values), wrong for high-cardinality columns."""
-    parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    parts = df.sparkSession.sparkContext.defaultParallelism
     keys = [F.col(c) for c in order_by]
     gate = F.col(gate_col).cast("boolean") if gate_col is not None else None
 
@@ -126,9 +118,7 @@ def assign_global_seq(df: DataFrame, order_by: list[str], start: int = 0,
         df = df.where(F.col(gate_col)).drop(gate_col)
     if n == 0:
         out = df.withColumn(out_col, F.lit(start).cast("long"))
-        if gate is not None:
-            return out, stats
-        return (out, 0) if with_count else out
+        return (out, stats) if gate is not None else out
     sample = sorted(tuple(s["_k"]) for r in part_stats for s in r["sample"])
     bounds: list[tuple] = []
     for i in range(1, parts):
@@ -177,6 +167,4 @@ def assign_global_seq(df: DataFrame, order_by: list[str], start: int = 0,
         .sortWithinPartitions("_bkt", *keys)
         .mapInPandas(number, schema)
     )
-    if gate is not None:
-        return out, stats
-    return (out, n) if with_count else out
+    return (out, stats) if gate is not None else out
