@@ -254,12 +254,13 @@ def _snap_id(cat, table):
 _CRASH_TABLES = {"frontier_commit": "frontier",
                  "archive_commit": "frontier_archive",
                  "seen_filters_commit": "seen_filters",
-                 "round_commit": None}
+                 "round_commit": None,
+                 "round0_commit": None}
 
 
 @pytest.mark.parametrize("crash", ["orphaned_dirs", "frontier_commit",
                                    "archive_commit", "seen_filters_commit",
-                                   "round_commit"])
+                                   "round_commit", "round0_commit"])
 def test_resume_from_snapshot_identity(spark, pages, policy, seeds_df,
                                        golden, tmp_path, monkeypatch, crash):
     """Kill after round k-1, and again inside round k — with orphaned
@@ -271,9 +272,12 @@ def test_resume_from_snapshot_identity(spark, pages, policy, seeds_df,
     identical to the uninterrupted run (E5). The filters are only
     written in a round that discovers links — round 0 on this corpus —
     so ``seen_filters_commit`` crashes inside round 0, the others
-    inside round 1."""
-    bloom = crash == "seen_filters_commit"
-    cfg, k = CrawlConfig(use_bloom=bloom), 0 if bloom else 1
+    inside round 1, except ``round0_commit``: the exact seen check
+    (no bloom) with every round-0 table committed, so the replay
+    must read ``seen`` at the pinned bootstrap snapshot — the current
+    one already holds round 0's children and would dedup them all."""
+    cfg = CrawlConfig(use_bloom=crash == "seen_filters_commit")
+    k = 0 if crash in ("seen_filters_commit", "round0_commit") else 1
     wh = tmp_path / "wh"
     cat = SnapshotCatalog(spark, str(wh))
     eng = CrawlEngine(spark, pages, policy, cat, cfg)
@@ -318,6 +322,32 @@ def test_resume_from_snapshot_identity(spark, pages, policy, seeds_df,
         m = round_metrics(cat2, entry)
         assert (m["links_enqueued"], m["articles_scraped"], m["errors"]) \
             == (g["enqueued"], g["articles"], g["errors"]), m
+
+
+def test_seen_only_discoveries_keep_filters_id(spark, pages, policy,
+                                               tmp_path):
+    """A round whose discover rows yield only already-seen children
+    inserts nothing into the seen filters, so it re-commits the base
+    round's ``seen_filters`` id instead of rewriting shards. Seeding
+    every URL the first seed page links to makes round 0 such a
+    round."""
+    from web_scrapers_python_spark.oracle import extract as ox
+    seed = _seed_dicts()[0]
+    children = ox.extract_links(_pages_dict()[seed["url"]], seed["label"])
+    seeds = [seed] + [{"url": u, "label": "PARSE"} for u in children]
+    p = tmp_path / "seeds.txt"
+    p.write_text("\n".join(json.dumps(s) for s in seeds) + "\n")
+    golden = sim.simulate(_pages_dict(), seeds, _policy_dict())
+    assert golden.rounds[0]["enqueued"] == 0 and children
+    cat, metrics = _run_engine(spark, pages, policy,
+                               read_seeds(spark, str(p)), tmp_path / "wh",
+                               CrawlConfig(use_bloom=True))
+    _assert_matches_golden(cat, metrics, golden)
+    assert metrics[0]["links_discovered"] > 0
+    assert metrics[0]["links_enqueued"] == 0
+    filters = {e["round"]: e["snapshots"]["seen_filters"]
+               for e in cat.rounds()}
+    assert filters[0] == filters[-1]
 
 
 def _assert_state_equal(cat, golden):

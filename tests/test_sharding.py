@@ -93,14 +93,70 @@ class TestShardCatalog:
         assert t.where("b=1").count() == 15   # untouched shard intact
 
     def test_empty_shard_overwrite_stays_readable(self, spark, tmp_path):
+        """An empty sharded write (a fresh table's first write, an
+        append, a shard overwrite) adds no path to its snapshot, and
+        every read of it still has the table's columns and types."""
         cat = SnapshotCatalog(spark, str(tmp_path))
         df = spark.range(10).select(
             "id", (F.col("id") % 2).cast("int").alias("b"))
-        cat.write_snapshot("t", df, shard_col="b")
         empty = spark.createDataFrame([], "id long, b int")
-        cat.overwrite_shards("t", empty, [0, 1], "b")
-        assert cat.read("t").count() == 0
-        assert cat.read("t").columns == ["id", "b"]
+        cat.write_snapshot("full", df, shard_col="b")
+        schema = cat.read("full").schema
+        for table in ("append", "overwrite"):
+            cat.write_snapshot(table, df, shard_col="b")
+        writes = {
+            "first_write": lambda: cat.write_snapshot(
+                "first_write", empty, shard_col="b"),
+            "append": lambda: cat.write_snapshot(
+                "append", empty, mode="append", shard_col="b"),
+            "overwrite": lambda: cat.overwrite_shards(
+                "overwrite", empty, [0, 1], "b"),
+        }
+        for table, write in writes.items():
+            before = (cat.current_snapshot(table) or {"paths": []})["paths"]
+            sid = write()
+            assert set(cat._paths_of(table, sid)) <= set(before), table
+            delta = cat.read_snapshot_delta(table, sid)
+            assert delta.columns == ["id", "b"] and delta.count() == 0
+            assert cat.snapshot_delta_rowcount(table, sid) == 0
+            assert cat.read(table).schema == schema, table
+        assert cat.read("first_write").count() == 0
+        assert cat.read("append").count() == 10
+        assert cat.read("overwrite").count() == 0
+
+    def test_reads_launch_no_spark_job(self, spark, tmp_path):
+        """Reads hand Spark the snapshot's stored schema, so building
+        the frame infers nothing and runs no job — current, time travel,
+        delta and shard-pruned reads of a multi-leaf table alike, shard
+        values no dir holds included."""
+        cat = SnapshotCatalog(spark, str(tmp_path))
+        df = spark.range(40).select(
+            "id", (F.col("id") % 8).cast("int").alias("b"))
+        s0 = cat.write_snapshot("t", df, shard_col="b")
+        ap = spark.createDataFrame([(100, 1), (101, 2)], "id long, b int")
+        s1 = cat.write_snapshot("t", ap, mode="append",
+                                base_snapshot_id=s0, shard_col="b")
+        assert len(cat._paths_of("t", s1)) == 10
+        reads = {
+            "read": lambda: cat.read("t"),
+            "time_travel": lambda: cat.read("t", s0),
+            "delta": lambda: cat.read_snapshot_delta("t", s1),
+            "shards": lambda: cat.read_shards("t", [1, 2, 99], s1),
+            "absent_shards": lambda: cat.read_shards("t", [98, 99]),
+        }
+        sc = spark.sparkContext
+        jobs = {}
+        try:
+            for name, read in reads.items():
+                sc.setJobGroup(f"catalog-read-{name}", name)
+                assert read().columns == ["id", "b"]
+                jobs[name] = len(sc.statusTracker().getJobIdsForGroup(
+                    f"catalog-read-{name}"))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert jobs == dict.fromkeys(reads, 0)
+        assert cat.read_shards("t", [1, 2, 99], s1).count() == 12
 
     def test_mixed_lineage_guard(self, spark, tmp_path):
         cat = SnapshotCatalog(spark, str(tmp_path))
@@ -186,6 +242,12 @@ class TestShardCatalog:
         names = {n for _, _, files in os.walk(wh) for n in files}
         assert not names & {"snapshots.json", "current.json",
                             "rounds.json"}
+        # empty sharded deltas (the bootstrap archive, empty appends)
+        # add no path, so no snapshot references an `empty` placeholder
+        paths = [p for root, _, files in os.walk(wh) for n in files
+                 if n.startswith("snap-") and n.endswith(".json")
+                 for p in json.load(open(os.path.join(root, n)))["paths"]]
+        assert paths and not [p for p in paths if p.endswith("/empty")]
 
 
 @pytest.fixture(scope="module")

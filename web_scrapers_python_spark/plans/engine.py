@@ -835,7 +835,8 @@ class CrawlEngine:
         pyarrow read (no Spark job barrier) and rebuilt, right-sized,
         from the seen log."""
         cfg, r = self.cfg, st.r
-        if st.filters is None:      # no discover rows, so no inserts
+        # no discover rows, or only already-seen children: no inserts
+        if st.counts["links_enqueued"] == 0:
             return st.bs["seen_filters"]
         buckets = sorted(st.child_buckets)
         new_filters = D.merge_bloom_filters(

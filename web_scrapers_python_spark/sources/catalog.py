@@ -16,11 +16,19 @@ written once and never edited:
   leaf dir per shard value for shard-tracked tables), written to
   ``snap-<n>.tmp`` and renamed into place;
 - ``<warehouse>/<table>/snap-<n>.json`` — snapshot ``n``'s metadata
-  (``id``, ``paths``, ``properties``, ``shard_col``, ``committed_at``),
-  written to a ``.tmp`` file after the data dir's rename. The
-  ``os.replace`` of this file is the table commit: a data dir without
-  it holds no committed data, and the next write to the table (which
-  picks the same ``n``) removes it;
+  (``id``, ``paths``, ``schema``, ``properties``, ``shard_col``,
+  ``committed_at``), written to a ``.tmp`` file after the data dir's
+  rename. The ``os.replace`` of this file is the table commit: a data
+  dir without it holds no committed data, and the next write to the
+  table (which picks the same ``n``) removes it;
+- ``schema`` is the written frame's schema. Every read hands it to
+  Spark's parquet reader with the snapshot's paths, so a read infers
+  nothing and launches no Spark job, and any number of paths — none
+  included — reads with the table's columns. An empty sharded delta
+  therefore adds no path to its snapshot. There is no fallback for
+  metadata files without ``schema``: a warehouse written before the
+  field existed must be rebuilt (tests and perfbench build fresh
+  ones);
 - the highest committed ``n`` is the table's current snapshot and the
   next write takes ``n + 1``, found by listing the table dir (once per
   catalog; committed ids are dense, so later commits are found by
@@ -54,6 +62,7 @@ import time
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _SNAP_META = re.compile(r"snap-(\d+)\.json")
 _ROUND_META = re.compile(r"(-?\d+)\.json")
@@ -157,7 +166,7 @@ class SnapshotCatalog:
                 if mode == "append" else [])
         snap_id, leafs = self._write_data(table, df, shard_col)
         return self._commit_snapshot(table, snap_id, base + leafs,
-                                     properties, shard_col)
+                                     df.schema, properties, shard_col)
 
     def overwrite_shards(self, table: str, df: DataFrame,
                          touched: list, shard_col: str,
@@ -191,7 +200,7 @@ class SnapshotCatalog:
                    and self._shard_value(p) not in touched_keys]
         snap_id, leafs = self._write_data(table, df, shard_col)
         return self._commit_snapshot(table, snap_id, carried + leafs,
-                                     properties, shard_col)
+                                     df.schema, properties, shard_col)
 
     def _base_paths(self, table: str, base_snapshot_id: int | None
                     ) -> list[str]:
@@ -209,7 +218,8 @@ class SnapshotCatalog:
                     shard_col: str | None) -> tuple[int, list[str]]:
         """Write df into the table's next ``snap-<n>`` dir (atomic via
         tmp-dir + rename). Returns (n, the snapshot's new paths: the
-        data dir, or its leaf shard dirs)."""
+        data dir, or its leaf shard dirs — none for an empty sharded
+        write)."""
         from pyspark.sql import functions as F
         tdir = self._tdir(table)
         os.makedirs(tdir, exist_ok=True)
@@ -244,23 +254,21 @@ class SnapshotCatalog:
         os.replace(tmp_dir, data_dir)  # data visible only after rename
         if shard_col is None:
             return snap_id, [data_dir]
-        leafs = sorted(
+        return snap_id, sorted(
             os.path.join(data_dir, d) for d in os.listdir(data_dir)
             if d.startswith("_pb="))
-        if not leafs:
-            # empty sharded write: keep one schema-bearing (empty)
-            # path so delta reads of this snapshot stay well-formed
-            leafs = [self._write_empty_fallback(data_dir, df)]
-        return snap_id, leafs
 
     def _commit_snapshot(self, table: str, snap_id: int, paths: list[str],
+                         schema: StructType,
                          properties: dict[str, Any] | None,
                          shard_col: str | None) -> int:
         """THE table commit: snapshot ``snap_id``'s metadata file lands
-        by atomic rename, after its data dir's."""
+        by atomic rename, after its data dir's. ``schema`` is the
+        caller's frame's, not the shard writer's (no ``_pb``)."""
         entry = {
             "id": snap_id,
             "paths": paths,
+            "schema": schema.jsonValue(),
             "committed_at": time.time(),
             "properties": properties or {},
         }
@@ -278,31 +286,38 @@ class SnapshotCatalog:
         return base.split("=", 1)[1] if base.startswith("_pb=") else None
 
     @staticmethod
-    def _write_empty_fallback(data_dir: str, df: DataFrame) -> str:
-        fb = os.path.join(data_dir, "empty")
-        df.limit(0).write.mode("overwrite").parquet(fb)
-        return fb
-
-    @staticmethod
     def _atomic_json(path: str, obj: Any) -> None:
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
             f.write(json.dumps(obj))
         os.replace(tmp, path)
 
-    def _paths_of(self, table: str, snapshot_id: int | None) -> list[str]:
-        """A snapshot's data paths; ``None`` = the current snapshot."""
-        if snapshot_id is not None:
-            return self._entry(table, snapshot_id)["paths"]
-        cur = self.current_snapshot(table)
-        if cur is None:
+    def _snapshot(self, table: str, snapshot_id: int | None
+                  ) -> dict[str, Any]:
+        """A snapshot's metadata; ``None`` = the current snapshot."""
+        snap = (self.current_snapshot(table) if snapshot_id is None
+                else self._entry(table, snapshot_id))
+        if snap is None:
             raise FileNotFoundError(f"table {table} has no snapshot")
-        return cur["paths"]
+        return snap
+
+    def _paths_of(self, table: str, snapshot_id: int | None) -> list[str]:
+        return self._snapshot(table, snapshot_id)["paths"]
 
     # -- read path -----------------------------------------------------------
+    def _scan(self, table: str, snapshot_id: int | None,
+              paths: list[str]) -> DataFrame:
+        """Every read: ``paths`` (any number, none included) under the
+        snapshot's stored schema — Spark infers nothing, so building
+        the frame launches no job."""
+        schema = StructType.fromJson(self._snapshot(table, snapshot_id)
+                                     ["schema"])
+        return self.spark.read.schema(schema).parquet(*paths)
+
     def read(self, table: str, snapshot_id: int | None = None) -> DataFrame:
         """Read current snapshot, or time-travel (`VERSION AS OF`)."""
-        return self.spark.read.parquet(*self._paths_of(table, snapshot_id))
+        return self._scan(table, snapshot_id,
+                          self._paths_of(table, snapshot_id))
 
     def snapshot_properties(self, table: str, snapshot_id: int) -> dict:
         return self._entry(table, snapshot_id)["properties"]
@@ -310,17 +325,18 @@ class SnapshotCatalog:
     def _delta_paths(self, table: str, snapshot_id: int) -> list[str]:
         """The data paths WRITTEN by this snapshot (excluding carried
         base dirs) — for an append or shard-overwrite snapshot, exactly
-        the delta it added. Derived from the tracked path list so shard
-        leaf dirs are read individually (no partition-dir inference)."""
+        the delta it added (none for an empty sharded write). Derived
+        from the tracked path list so shard leaf dirs are read
+        individually (no partition-dir inference)."""
         prefix = os.path.join(self._tdir(table), f"snap-{snapshot_id}")
-        paths = [p for p in self._paths_of(table, snapshot_id)
-                 if p == prefix or p.startswith(prefix + os.sep)]
-        return paths or [prefix]
+        return [p for p in self._paths_of(table, snapshot_id)
+                if p == prefix or p.startswith(prefix + os.sep)]
 
     def read_snapshot_delta(self, table: str, snapshot_id: int) -> DataFrame:
         """Read ONLY the rows written by this snapshot — for an append
         snapshot, exactly the delta rows it added."""
-        return self.spark.read.parquet(*self._delta_paths(table, snapshot_id))
+        return self._scan(table, snapshot_id,
+                          self._delta_paths(table, snapshot_id))
 
     def shard_paths(self, table: str, shards: list,
                     snapshot_id: int | None = None) -> list[str]:
@@ -336,11 +352,10 @@ class SnapshotCatalog:
                     snapshot_id: int | None = None) -> DataFrame:
         """Read only the given shard values' data dirs. O(selected
         shards) I/O regardless of table size — the basis for per-shard
-        compaction and degraded-bucket rebuilds."""
-        paths = self.shard_paths(table, shards, snapshot_id)
-        if not paths:   # no dir holds these shards: empty, same schema
-            return self.read(table, snapshot_id).limit(0)
-        return self.spark.read.parquet(*paths)
+        compaction and degraded-bucket rebuilds. Shard values no dir
+        holds read as an empty frame with the table's columns."""
+        return self._scan(table, snapshot_id,
+                          self.shard_paths(table, shards, snapshot_id))
 
     def _dir_rowcount(self, d: str) -> int:
         """Row count of one immutable data dir from parquet footers,
@@ -363,7 +378,7 @@ class SnapshotCatalog:
         if shards is not None:
             keys = {str(v) for v in shards}
             paths = [p for p in paths if self._shard_value(p) in keys]
-        return sum(self._dir_rowcount(p) for p in paths if os.path.isdir(p))
+        return sum(self._dir_rowcount(p) for p in paths)
 
     def snapshot_delta_columns_local(self, table: str, snapshot_id: int,
                                      columns: list[str]) -> list[dict]:
@@ -374,8 +389,6 @@ class SnapshotCatalog:
         import pyarrow.parquet as pq
         out: list[dict] = []
         for d in self._delta_paths(table, snapshot_id):
-            if not os.path.isdir(d):
-                continue
             for f in sorted(os.listdir(d)):
                 if f.endswith(".parquet"):
                     t = pq.read_table(os.path.join(d, f), columns=columns)
