@@ -48,7 +48,6 @@ def main() -> None:
     ap.add_argument("--salts", type=int, default=16)
     ap.add_argument("--bloom", action="store_true",
                     help="bloom pre-filter before the exact seen anti-join")
-    ap.add_argument("--max-depth", type=int, default=None)
     ap.add_argument("--synthesize", type=int, default=None, metavar="N",
                     help="generate an N-page synthetic corpus instead of "
                          "--pages (smoke/testing)")
@@ -89,7 +88,7 @@ def main() -> None:
               "robots_disallow array<string>")
 
     kwargs = dict(order=args.order, n_salts=args.salts,
-                  use_bloom=args.bloom, max_depth=args.max_depth)
+                  use_bloom=args.bloom)
     if args.budget is not None:
         kwargs["default_budget"] = args.budget
     engine = CrawlEngine(spark, pages, policy,

@@ -350,6 +350,35 @@ def test_seen_only_discoveries_keep_filters_id(spark, pages, policy,
     assert filters[0] == filters[-1]
 
 
+def test_priority_order_matches_simulator(spark, pages, policy, tmp_path):
+    """W1: ``order="priority"`` spends each host's budget by (priority
+    desc, depth, seq). Forty seeds of mixed priority outrun the per-host
+    budgets, so the order decides what each round schedules (the FIFO
+    simulation schedules other sets). The engine matches
+    ``frontier_sim.simulate(order="priority")`` round by round:
+    scheduled sets, seqs and the seen set."""
+    seeds = [{"url": G.url_of(SEED, i, H), "label": "a",
+              "priority": (i * 7) % 5} for i in range(40)]
+    p = tmp_path / "seeds.txt"
+    p.write_text("\n".join(json.dumps(s) for s in seeds) + "\n")
+    pages_d = _pages_dict()
+    golden = sim.simulate(pages_d, seeds, _policy_dict(), order="priority")
+    fifo = sim.simulate(pages_d, seeds, _policy_dict())
+    assert [set(g["scheduled"]) for g in golden.rounds] \
+        != [set(g["scheduled"]) for g in fifo.rounds]
+    cat, metrics = _run_engine(spark, pages, policy,
+                               read_seeds(spark, str(p)), tmp_path / "wh",
+                               CrawlConfig(order="priority"))
+    _assert_matches_golden(cat, metrics, golden)
+    entries = [e for e in cat.rounds() if e["round"] >= 0]
+    for entry, g in zip(entries, golden.rounds):
+        seen = merged_seen(cat.read("seen", entry["snapshots"]["seen"]))
+        fetched_r = {row["url"] for row in seen.where(
+            F.col("last_scrape_round") == g["round"]).select("url").collect()}
+        assert fetched_r == {u for u in g["scheduled"] if u in pages_d}, \
+            f"round {g['round']}"
+
+
 def _assert_state_equal(cat, golden):
     seen = {r["url_hash"] for r in cat.read("seen").select("url_hash").collect()}
     assert seen == golden.seen
@@ -440,7 +469,7 @@ def test_messy_url_canonical_keyspace(spark, policy, tmp_path):
 
 
 def test_bucketed_pages_full_crawl(spark, policy, seeds_df, golden,
-                                   pages, tmp_path):
+                                   pages, tmp_path, monkeypatch):
     """The whole round loop over a url-bucketed pages warehouse table:
     results identical to the golden simulator AND the round's fetch
     joins never shuffle the corpus — the pages side of the sort-merge
@@ -461,14 +490,31 @@ def test_bucketed_pages_full_crawl(spark, policy, seeds_df, golden,
         # guarantees the 1-file-per-bucket precondition)
         spark.conf.set(
             "spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-        cfg = CrawlConfig(fetch_broadcast_rows=0, capture_plans=True)
+        # record the formatted physical plan of each round's fetch
+        # joins as _fetch returns them
+        captured_plans = {}
+        fetch = CrawlEngine._fetch
+
+        def recording_fetch(self, st, scheduled):
+            out = fetch(self, st, scheduled)
+            fetched, _, parse_rows, _ = out
+            jvm = spark.sparkContext._jvm
+            captured_plans[st.r] = {
+                name: jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted")
+                for name, df in (("fetched", fetched),
+                                 ("parse_rows", parse_rows))}
+            return out
+
+        monkeypatch.setattr(CrawlEngine, "_fetch", recording_fetch)
+        cfg = CrawlConfig(fetch_broadcast_rows=0)
         cat = SnapshotCatalog(spark, str(tmp_path / "wh"))
         eng = CrawlEngine(spark, read_bucketed(spark, "t_pages_crawl_b"),
                           policy, cat, cfg)
         metrics = eng.run(seeds_df, max_rounds=30)
         _assert_matches_golden(cat, metrics, golden)
 
-        assert eng.captured_plans, "capture_plans must record rounds"
+        assert captured_plans, "the plans of every round must be recorded"
 
         def depth(line: str) -> int:
             return max(line.find("+- "), line.find(":- "))
@@ -494,7 +540,7 @@ def test_bucketed_pages_full_crawl(spark, policy, seeds_df, golden,
             return out
 
         checked = 0
-        for r, plans in eng.captured_plans.items():
+        for r, plans in captured_plans.items():
             for name, plan in plans.items():
                 tree = plan.split("== Physical Plan ==")[-1]
                 tree = tree.split("\n\n")[0]   # tree section only

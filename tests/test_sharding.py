@@ -344,18 +344,41 @@ class TestFrontierDeltaCommit:
     def test_driver_barrier_budget(self, spark, crawl_setup, tmp_path):
         """Per-round driver materializations (collect/count barriers)
         must stay within budget: steady-state rounds pay exactly ONE
-        planning collect; discover rounds at most 4. Everything else is
-        footer arithmetic or a snapshot write."""
+        planning collect; discover rounds at most 2 (the planning
+        collect, which also picks the sequencer's bounds, plus the
+        sequencer's per-bucket aggregate). Everything else is footer
+        arithmetic or a snapshot write."""
         pages, policy, seeds = crawl_setup
         cat = SnapshotCatalog(spark, str(tmp_path))
         eng = CrawlEngine(spark, pages, policy, cat,
                           CrawlConfig(use_bloom=True))
         ms = eng.run(read_seeds(spark, seeds), max_rounds=6)
         assert len(ms) >= 2
+        assert ms[0]["links_discovered"] > 0
         for m in ms:
-            assert m["_collects"] <= 4, m
+            assert m["_collects"] <= 2, m
         # the final drain round has no discoveries: 1 planning collect
         assert ms[-1]["_collects"] == 1, ms[-1]
+
+    def test_refresh_round_pays_one_collect(self, spark, crawl_setup,
+                                            tmp_path):
+        """A refresh crawl (``recrawl_ttl=1``) of PARSE seeds re-enqueues
+        the previous round's cohort every round; the cohort is counted
+        inside the planning collect, so every round pays exactly one
+        driver barrier."""
+        pages, policy, _ = crawl_setup
+        p = tmp_path / "parse_seeds.txt"
+        p.write_text("\n".join(
+            json.dumps({"url": G.url_of(7, i, 16), "label": "PARSE"})
+            for i in range(24)) + "\n")
+        cat = SnapshotCatalog(spark, str(tmp_path / "wh"))
+        eng = CrawlEngine(spark, pages, policy, cat,
+                          CrawlConfig(recrawl_ttl=1))
+        ms = eng.run(read_seeds(spark, str(p)), max_rounds=4)
+        assert len(ms) == 4
+        assert all(m["recrawl_enqueued"] > 0 for m in ms[1:]), ms
+        for m in ms:
+            assert m["_collects"] == 1, m
 
 
 class TestBucketedJoin:

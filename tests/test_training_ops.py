@@ -580,90 +580,6 @@ class TestDupClusters:
         assert a == b and len(a) == 13
 
 
-class TestStreamingDedup:
-    def test_stateful_first_seen_matches_batch(self, spark, tmp_path):
-        """applyInPandasWithState seen-set dedup over several
-        micro-batches == batch first-wins (J1/J2), with state carrying
-        across triggers."""
-        import time as _t
-        from web_scrapers_python_spark.operators.dedup import first_wins
-        from web_scrapers_python_spark.streaming.dedup import (
-            EVENT_SCHEMA, run_stream_dedup)
-
-        rows = []
-        for i in range(400):
-            k = i % 150                       # 150 distinct urls, repeats
-            rows.append((f"h{k:03d}", f"https://x.test/{k}", k % 8, i))
-        df = spark.createDataFrame(rows, EVENT_SCHEMA)
-        src = str(tmp_path / "events")
-        # four sequential appends = four files in arrival order == seq
-        # order, so streaming arrival-order dedup equals batch min-seq
-        for lo in range(0, 400, 100):
-            df.where((F.col("seq") >= lo) & (F.col("seq") < lo + 100)) \
-              .coalesce(1).write.mode("append").parquet(src)
-            _t.sleep(1.1)
-
-        got = run_stream_dedup(spark, src, "stream_dedup_t",
-                               str(tmp_path / "ckpt"))
-        want = first_wins(df, "url_hash", "seq")
-        g = {(r["url_hash"], r["seq"]) for r in got.collect()}
-        w = {(r["url_hash"], r["seq"]) for r in want.collect()}
-        assert g == w
-        assert len(g) == 150
-
-    def _write_batches(self, spark, df, src):
-        import time as _t
-        for lo in range(0, 400, 100):
-            df.where((F.col("seq") >= lo) & (F.col("seq") < lo + 100)) \
-              .coalesce(1).write.mode("append").parquet(src)
-            _t.sleep(1.1)
-
-    def test_bloom_state_matches_batch(self, spark, tmp_path):
-        """The 10^10 state layout (serialized bloom + bounded exact
-        suffix, round-4 VERDICT item 3) == batch first-wins on the same
-        event stream. fp_rate=1e-6 at 150 keys: the bloom contributes
-        zero false drops here (deterministic given the fixed sha256
-        hash family), so equality is exact."""
-        from web_scrapers_python_spark.operators.dedup import first_wins
-        from web_scrapers_python_spark.streaming.dedup import (
-            EVENT_SCHEMA, run_stream_dedup)
-        rows = [(f"h{i % 150:03d}", f"https://x.test/{i % 150}",
-                 (i % 150) % 8, i) for i in range(400)]
-        df = spark.createDataFrame(rows, EVENT_SCHEMA)
-        src = str(tmp_path / "events_b")
-        self._write_batches(spark, df, src)
-        got = run_stream_dedup(spark, src, "stream_dedup_bloom_t",
-                               str(tmp_path / "ckpt_b"), variant="bloom",
-                               capacity=10_000, fp_rate=1e-6)
-        want = first_wins(df, "url_hash", "seq")
-        g = {(r["url_hash"], r["seq"]) for r in got.collect()}
-        w = {(r["url_hash"], r["seq"]) for r in want.collect()}
-        assert g == w and len(g) == 150
-
-    def test_bloom_dups_beyond_suffix_window_still_dropped(
-            self, spark, tmp_path):
-        """suffix_len=4 — far smaller than the 150-key working set — so
-        most duplicates arrive AFTER their key left the exact suffix.
-        The bloom has no false negatives, so first-wins still holds
-        exactly: the suffix is an exact fast path, never a correctness
-        dependency for dup-dropping."""
-        from web_scrapers_python_spark.operators.dedup import first_wins
-        from web_scrapers_python_spark.streaming.dedup import (
-            EVENT_SCHEMA, run_stream_dedup)
-        rows = [(f"h{i % 150:03d}", f"https://x.test/{i % 150}",
-                 (i % 150) % 8, i) for i in range(400)]
-        df = spark.createDataFrame(rows, EVENT_SCHEMA)
-        src = str(tmp_path / "events_sfx")
-        self._write_batches(spark, df, src)
-        got = run_stream_dedup(spark, src, "stream_dedup_sfx_t",
-                               str(tmp_path / "ckpt_sfx"), variant="bloom",
-                               capacity=10_000, fp_rate=1e-6, suffix_len=4)
-        want = first_wins(df, "url_hash", "seq")
-        g = {(r["url_hash"], r["seq"]) for r in got.collect()}
-        w = {(r["url_hash"], r["seq"]) for r in want.collect()}
-        assert g == w and len(g) == 150
-
-
 class TestSequencerProperties:
     """Property tests for the frozen-bucket global sequencer — ranks
     must equal the sorted index for ANY key distribution, and must be
@@ -699,18 +615,20 @@ class TestSequencerProperties:
         assert got == {k: i for i, k in enumerate(sorted(keys))}
 
     def test_gated_planning_stats(self, spark):
-        """gate_col fuses a filter into the planning pass: only gated
-        rows are sequenced (dense over the GATED key order), while the
-        returned stats count ALL rows and union the set_col values —
-        the crawl engine's links-discovered fusion contract."""
+        """The numbering step's one per-bucket aggregate also yields the
+        planning stats: only gated rows are sequenced (dense over the
+        GATED key order), while the returned stats count ALL rows and
+        union the set_col values — the crawl engine's links-discovered
+        contract."""
         from web_scrapers_python_spark.operators.sequence import (
-            assign_global_seq)
+            number_by_bounds, sample_bounds)
         rows = [(k, k % 3 != 0, k % 7) for k in range(500)]
         df = spark.createDataFrame(
             rows, "k long, fresh boolean, host_bucket int").repartition(5)
-        out, stats = assign_global_seq(df, ["k"], start=11,
-                                       gate_col="fresh",
-                                       set_col="host_bucket")
+        bounds = sample_bounds(df, ["k"])
+        out, stats = number_by_bounds(df, ["k"], bounds, start=11,
+                                      gate_col="fresh",
+                                      set_col="host_bucket")
         gated = sorted(k for k, f, _ in rows if f)
         got = {r["k"]: r["seq"] for r in out.collect()}
         assert got == {k: 11 + i for i, k in enumerate(gated)}
@@ -718,12 +636,39 @@ class TestSequencerProperties:
         assert stats == {"n": len(gated), "n_all": len(rows),
                          "set": set(range(7))}
         # all-false gate: no sequencing pass, stats still total
-        out0, stats0 = assign_global_seq(
-            df.withColumn("fresh", F.lit(False)), ["k"], start=11,
+        out0, stats0 = number_by_bounds(
+            df.withColumn("fresh", F.lit(False)), ["k"], bounds, start=11,
             gate_col="fresh", set_col="host_bucket")
         assert out0.count() == 0
         assert stats0 == {"n": 0, "n_all": len(rows),
                           "set": set(range(7))}
+
+    def test_literal_bounds_match_sampled_seqs(self, spark):
+        """Numbering against caller-given literal bounds — full keys or
+        key prefixes, as the crawl engine passes the parents' seqs for
+        (parent_seq, pos) children — gives exactly the seqs of
+        ``assign_global_seq`` and of the sorted index, whatever the
+        bucketing."""
+        from web_scrapers_python_spark.operators.sequence import (
+            assign_global_seq, number_by_bounds)
+        rows = [(p, pos) for p in range(0, 400, 7) for pos in range(p % 5)]
+        df = spark.createDataFrame(rows, "parent_seq long, pos long") \
+                  .repartition(3)
+        want = {k: 5 + i for i, k in enumerate(sorted(rows))}
+        sampled = assign_global_seq(df, ["parent_seq", "pos"], start=5)
+        assert {(r["parent_seq"], r["pos"]): r["seq"]
+                for r in sampled.collect()} == want
+        for bounds in ([(98,), (203,), (301,)],
+                       [(98, 1), (98, 3), (203, 0), (350, 2)]):
+            # the bounds split the keys into >= 3 non-empty buckets
+            assert len({sum(k[:len(b)] >= b for b in bounds)
+                        for k in rows}) >= 3
+            out, stats = number_by_bounds(df, ["parent_seq", "pos"],
+                                          bounds, start=5)
+            assert {(r["parent_seq"], r["pos"]): r["seq"]
+                    for r in out.collect()} == want
+            assert stats == {"n": len(rows), "n_all": len(rows),
+                             "set": set()}
 
     def test_reevaluation_stability_with_downstream_ops(self, spark):
         from web_scrapers_python_spark.operators.sequence import (

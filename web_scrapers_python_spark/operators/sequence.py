@@ -7,16 +7,26 @@ for each round's newly discovered batch — NOT
 ``monotonically_increasing_id`` (partition-dependent) and NOT a
 single-partition global window (driver-size bottleneck at 10^10).
 
-``assign_global_seq`` is a zipWithIndex-style plan with EXPLICIT,
-deterministic range buckets:
+The sequencer is a zipWithIndex-style plan with EXPLICIT,
+deterministic range buckets, in two steps:
 
-1. a deterministic hash-systematic sample of the order keys picks
-   literal bucket bounds (collected once, frozen into the plan);
-2. each row's bucket is a codegen'd when-ladder against those bounds;
-3. per-bucket counts (one small aggregate → driver) give each bucket's
-   global offset;
-4. rows shuffle once on the bucket id and are numbered map-side
-   (mapInPandas) inside their sorted bucket.
+1. ``sample_bounds`` — bound sampling: a deterministic hash-systematic
+   sample of the order keys (``key_sample``, an aggregate Column) picks
+   literal bucket bounds (``pick_bounds``). One driver job.
+2. ``number_by_bounds`` — numbering against literal bounds: each row's
+   bucket is a codegen'd when-ladder against the bounds frozen into the
+   plan; one per-bucket aggregate (→ driver) gives each bucket's global
+   offset, plus the gated/total counts and a set column's values; rows
+   then shuffle once on the bucket id and are numbered map-side
+   (mapInPandas) inside their sorted bucket. One driver job.
+
+``assign_global_seq`` is step 1 then step 2, for keys whose range no
+caller knows in advance. The crawl engine pays step 2 alone: its
+planning collect already aggregates ``key_sample`` over the discover
+rows' ``seq``, and every child's ``parent_seq`` is one of those seqs,
+so those bounds (key prefixes) bucket the children. ANY bounds yield
+the same seqs — bounds only choose the bucketing; the numbering is
+fixed by the global key order.
 
 Why not ``repartitionByRange`` + ``spark_partition_id``: Spark samples
 range bounds PER JOB (the sampling seed derives from the physical
@@ -34,13 +44,15 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 SAMPLE_MOD = 1024     # systematic sample thins to ~n/1024 candidates
-SAMPLE_PER_PART = 256  # per-partition cap: driver sees O(parts * 256)
+SAMPLE_PER_PART = 256  # per-group cap: driver sees O(groups * 256)
 
 
 def _lex_ge(cols: list[Column], vals: tuple) -> Column:
-    """Lexicographic (c0,c1,..) >= (v0,v1,..) as a codegen-able expr."""
+    """Lexicographic (c0,c1,..) >= (v0,v1,..) as a codegen-able expr;
+    a shorter ``vals`` compares a key prefix."""
     prefix_eq = F.lit(True)
     gt = F.lit(False)
     for c, v in zip(cols, vals):
@@ -49,101 +61,89 @@ def _lex_ge(cols: list[Column], vals: tuple) -> Column:
     return gt | prefix_eq
 
 
-def assign_global_seq(df: DataFrame, order_by: list[str], start: int = 0,
-                      out_col: str = "seq",
-                      gate_col: str | None = None,
-                      set_col: str | None = None):
-    """Add ``out_col`` = start + 0-based dense rank of the row in the
-    global (order_by) ordering. order_by must be a unique, non-null
-    composite key for determinism. The result is safe to re-evaluate
-    (all plan inputs are frozen literals). Planning is two driver jobs
-    total: one fused count+bound-sample aggregate, one per-bucket count.
-
-    ``gate_col`` fuses a caller-side filter INTO the planning pass:
-    only rows where the boolean ``gate_col`` is true are sequenced and
-    returned (the column is dropped), but the first planning job
-    aggregates over ALL input rows and the call returns ``(out,
-    stats)`` with ``stats = {"n": gated count, "n_all": total count,
-    "set": distinct set_col values over all rows}``. The crawl engine
-    uses this to fold its links-discovered count + touched-bucket set
-    (previously a separate job over the child frame) into the planning
-    barrier the sequencer pays anyway — one fewer driver round-trip per
-    discovery round on real executors. ``set_col`` values are
-    collect_set'd per input partition and unioned driver-side:
-    bounded at O(parts * |domain|) — fine for host_bucket (<= 1024
-    values), wrong for high-cardinality columns."""
-    parts = df.sparkSession.sparkContext.defaultParallelism
-    keys = [F.col(c) for c in order_by]
-    gate = F.col(gate_col).cast("boolean") if gate_col is not None else None
-
-    # one job: row count + deterministic BOUNDED key sample (no RNG, no
-    # seed). The pmod filter thins to ~n/SAMPLE_MOD candidates; the
-    # per-partition min-hash truncation (sort by hash, keep the
-    # SAMPLE_PER_PART smallest) bounds what crosses the final exchange
-    # and lands on the driver to O(parts * constant) structs — an
-    # unbounded n/1024 sample is ~10^7 structs (GBs) through a single
-    # reduce task at the 10^10 design point. Truncating by smallest
-    # hash keeps the subsample uniform over the key space, and ANY
-    # valid sample yields the same final seq (bounds only choose the
-    # bucketing; the numbering is fixed by the global key order).
+def key_sample(keys: list[Column]) -> Column:
+    """Aggregate Column: a deterministic BOUNDED sample of ``keys`` per
+    group (no RNG, no seed). The pmod filter thins to ~n/SAMPLE_MOD
+    candidates; the min-hash truncation (sort by hash, keep the
+    SAMPLE_PER_PART smallest) bounds what crosses the final exchange
+    and lands on the driver to a constant per group — an unbounded
+    n/1024 sample is ~10^7 structs (GBs) through a single reduce task
+    at the 10^10 design point. Truncating by smallest hash keeps the
+    subsample uniform over the key space."""
     h = F.xxhash64(*keys)
-    samp_cond = F.pmod(h, F.lit(SAMPLE_MOD)) == 0
-    if gate is not None:
-        samp_cond = gate & samp_cond
-    aggs = [
-        (F.count(F.when(gate, F.lit(1))) if gate is not None
-         else F.count(F.lit(1))).alias("n"),
-        F.slice(
-            F.array_sort(F.collect_list(
-                F.when(samp_cond,
-                       F.struct(h.alias("_h"),
-                                F.struct(*keys).alias("_k"))))),
-            1, SAMPLE_PER_PART).alias("sample"),
-    ]
-    if gate is not None:
-        aggs.append(F.count(F.lit(1)).alias("n_all"))
-        if set_col is not None:
-            aggs.append(F.collect_set(set_col).alias("_set"))
-    part_stats = df.groupBy(F.spark_partition_id().alias("_pid")).agg(
-        *aggs).collect()
-    n = int(sum(r["n"] for r in part_stats))
-    stats = None
-    if gate is not None:
-        stats = {
-            "n": n,
-            "n_all": int(sum(r["n_all"] for r in part_stats)),
-            "set": ({v for r in part_stats for v in r["_set"]}
-                    if set_col is not None else set()),
-        }
-        df = df.where(F.col(gate_col)).drop(gate_col)
-    if n == 0:
-        out = df.withColumn(out_col, F.lit(start).cast("long"))
-        return (out, stats) if gate is not None else out
-    sample = sorted(tuple(s["_k"]) for r in part_stats for s in r["sample"])
+    return F.slice(
+        F.array_sort(F.collect_list(
+            F.when(F.pmod(h, F.lit(SAMPLE_MOD)) == 0,
+                   F.struct(h.alias("_h"), F.struct(*keys).alias("_k"))))),
+        1, SAMPLE_PER_PART)
+
+
+def pick_bounds(sample: list, parts: int) -> list[tuple]:
+    """Strictly increasing key tuples that split the collected
+    ``key_sample`` structs into at most ``parts`` buckets."""
+    keys = sorted(tuple(s["_k"]) for s in sample)
     bounds: list[tuple] = []
     for i in range(1, parts):
-        j = (i * len(sample)) // parts
-        if 0 < j < len(sample):
-            b = sample[j]
-            if not bounds or b > bounds[-1]:
-                bounds.append(b)
+        j = (i * len(keys)) // parts
+        if 0 < j < len(keys) and (not bounds or keys[j] > bounds[-1]):
+            bounds.append(keys[j])
+    return bounds
 
+
+def sample_bounds(df: DataFrame, order_by: list[str]) -> list[tuple]:
+    """Bound sampling: one job aggregates ``key_sample`` per input
+    partition, so the driver sees O(parts * SAMPLE_PER_PART) keys."""
+    parts = df.sparkSession.sparkContext.defaultParallelism
+    rows = df.groupBy(F.spark_partition_id()).agg(
+        key_sample([F.col(c) for c in order_by]).alias("s")).collect()
+    return pick_bounds([s for r in rows for s in r["s"]], parts)
+
+
+def number_by_bounds(df: DataFrame, order_by: list[str],
+                     bounds: list[tuple], start: int = 0,
+                     out_col: str = "seq", gate_col: str | None = None,
+                     set_col: str | None = None
+                     ) -> tuple[DataFrame, dict]:
+    """Numbering against literal ``bounds`` (key tuples or key
+    prefixes, strictly increasing). Adds ``out_col`` = start + 0-based
+    dense rank of the row in the global (order_by) ordering; order_by
+    must be a unique, non-null composite key. The result is safe to
+    re-evaluate (every plan input is a frozen literal).
+
+    One per-bucket aggregate is the only driver job. With ``gate_col``
+    only rows whose boolean ``gate_col`` is true are numbered and
+    returned (the column is dropped). Returns ``(frame, stats)`` with
+    ``stats = {"n": gated count, "n_all": total count, "set": distinct
+    set_col values over all rows}``; ``set_col`` values are
+    collect_set'd per bucket — fine for host_bucket (<= 1024 values),
+    wrong for high-cardinality columns."""
+    parts = df.sparkSession.sparkContext.defaultParallelism
+    keys = [F.col(c) for c in order_by]
     bucket = F.lit(0)
     for b in bounds:
         bucket = bucket + F.when(_lex_ge(keys, b), 1).otherwise(0)
     work = df.withColumn("_bkt", bucket.cast("int"))
-
-    counts = {
-        r["_bkt"]: r["cnt"]
-        for r in work.groupBy("_bkt").agg(F.count("*").alias("cnt")).collect()
-    }
+    gate = (F.col(gate_col).cast("boolean") if gate_col is not None
+            else F.lit(True))
+    aggs = [F.count(F.when(gate, 1)).alias("n"),
+            F.count(F.lit(1)).alias("n_all")]
+    if set_col is not None:
+        aggs.append(F.collect_set(set_col).alias("_set"))
+    rows = sorted(work.groupBy("_bkt").agg(*aggs).collect())
+    stats = {"n": sum(r["n"] for r in rows),
+             "n_all": sum(r["n_all"] for r in rows),
+             "set": ({v for r in rows for v in r["_set"]}
+                     if set_col is not None else set())}
+    if gate_col is not None:
+        work = work.where(gate).drop(gate_col)
+    if stats["n"] == 0:
+        return (work.drop("_bkt")
+                .withColumn(out_col, F.lit(start).cast("long")), stats)
     offsets: dict[int, int] = {}
     acc = start
-    for bkt in sorted(counts):
-        offsets[bkt] = acc
-        acc += counts[bkt]
-
-    schema = df.schema.add(out_col, "long")
+    for r in rows:
+        offsets[r["_bkt"]] = acc
+        acc += r["n"]
 
     def number(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         local: dict[int, int] = {}
@@ -162,9 +162,19 @@ def assign_global_seq(df: DataFrame, order_by: list[str], start: int = 0,
             b[out_col] = pd.concat(seqs).sort_index()
             yield b
 
+    schema = T.StructType(work.drop("_bkt").schema.fields
+                          + [T.StructField(out_col, T.LongType())])
     out = (
         work.repartition(min(parts, len(bounds) + 1), "_bkt")
         .sortWithinPartitions("_bkt", *keys)
         .mapInPandas(number, schema)
     )
-    return (out, stats) if gate is not None else out
+    return out, stats
+
+
+def assign_global_seq(df: DataFrame, order_by: list[str], start: int = 0,
+                      out_col: str = "seq") -> DataFrame:
+    """``number_by_bounds`` over bounds sampled from ``df`` itself: two
+    driver jobs (bound sample, per-bucket counts)."""
+    return number_by_bounds(df, order_by, sample_bounds(df, order_by),
+                            start, out_col)[0]

@@ -67,6 +67,7 @@ from __future__ import annotations
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -76,7 +77,7 @@ from ..operators import history as HY
 from ..operators import links as L
 from ..operators import parse as P
 from ..operators import politeness as W
-from ..operators.sequence import assign_global_seq
+from ..operators.sequence import key_sample, number_by_bounds, pick_bounds
 from ..sources.catalog import SnapshotCatalog
 
 FRONTIER_COLS = [
@@ -219,7 +220,6 @@ class CrawlConfig:
                                    # design point: ~2e7 per bucket)
     rediscover: bool = False     # False = reference two-phase routing
     max_retries: int = 3         # orchestrator.py:64
-    max_depth: int | None = None
     max_rounds: int = 100
     # J4 physical strategy: broadcast the scheduled batch into the pages
     # join only while it is provably SMALL. Beyond the threshold the
@@ -247,11 +247,6 @@ class CrawlConfig:
     # article versions; content_history classifies them
     # updated/duplicate against the latest stored hash.
     recrawl_ttl: int | None = None
-    # debug/test hook: capture the formatted physical plan of each
-    # round's fetch joins into engine.captured_plans[round] — used by
-    # the bucketed-warehouse crawl test to assert the pages corpus is
-    # never shuffled by the round loop. No effect on execution.
-    capture_plans: bool = False
 
     def order_by(self) -> list:
         if self.order == "priority":
@@ -308,7 +303,6 @@ class CrawlEngine:
         # driver-side materializations (collect/count) in the last
         # run_round call — the job-barrier budget tests assert on this
         self.last_round_collects = 0
-        self.captured_plans: dict[int, dict[str, str]] = {}
 
     def _budget_cap(self) -> int:
         """A literal upper bound on every host's politeness budget —
@@ -421,29 +415,30 @@ class CrawlEngine:
     def _plan(self, st: _RoundState) -> None:
         """Schedule the batch, fetch it, plan parse and discovery, and
         derive every round-delta frame the write phases commit. Driver
-        barriers: the recrawl cohort's count, the one planning collect
-        and the sequencer's planning jobs."""
-        self._add_recrawl_cohort(st)
+        barriers: the one planning collect (``_count_batch``) and, in a
+        round with discover rows, the sequencer's one per-bucket
+        aggregate."""
+        cohort = self._recrawl_cohort(st)
         scheduled, blocked = self._schedule(st)
-        has_discover = self._count_batch(st, scheduled, blocked)
+        bounds = self._count_batch(st, scheduled, blocked, cohort)
         fetched, missing, parse_rows, discover_rows = self._fetch(
             st, scheduled)
         self._parse(st, parse_rows)
-        self._discover(st, discover_rows, has_discover)
+        self._discover(st, discover_rows, bounds)
         self._transition(st, fetched, missing, blocked)
 
-    def _add_recrawl_cohort(self, st: _RoundState) -> None:
+    def _recrawl_cohort(self, st: _RoundState) -> DataFrame | None:
         """Refresh cohort: the rows fetched exactly ttl rounds ago, read
         from THAT round's archive delta dir alone (one snapshot lookup —
         O(cohort), no cumulative scan). They re-enter pending with their
-        ORIGINAL seq, so FIFO order re-crawls oldest-first."""
-        st.counts["recrawl_enqueued"] = 0
+        ORIGINAL seq, so FIFO order re-crawls oldest-first. Nothing is
+        collected here: ``_count_batch`` counts the cohort."""
         if self.cfg.recrawl_ttl is None:
-            return
+            return None
         due_round = st.r - self.cfg.recrawl_ttl
         due = self.catalog.round_entry(due_round) if due_round >= 0 else None
         if due is None:
-            return
+            return None
         cohort = st.cache(
             self.catalog.read_snapshot_delta(
                 "frontier_archive", due["snapshots"]["frontier_archive"])
@@ -451,22 +446,13 @@ class CrawlEngine:
             .withColumn("state", F.lit("pending"))
             .withColumn("retry_count", F.lit(0))
             .select(*FRONTIER_COLS))
-        crow = cohort.agg(
-            F.count("*").alias("n"),
-            F.collect_set("host_bucket").alias("bk")).collect()[0]
-        self.last_round_collects += 1
-        st.counts["recrawl_enqueued"] = int(crow["n"])
-        st.touched |= {int(b) for b in crow["bk"]}
-        if crow["n"]:
-            st.frontier = st.frontier.unionByName(cohort)
+        st.frontier = st.frontier.unionByName(cohort)
+        return cohort
 
     def _schedule(self, st: _RoundState) -> tuple[DataFrame, DataFrame]:
         """Robots split, then the per-host politeness top-B."""
         cfg = self.cfg
-        pending = st.frontier
-        if cfg.max_depth is not None:
-            pending = pending.where(F.col("depth") <= cfg.max_depth)
-        allowed, blocked = W.apply_robots(pending, self.host_policy)
+        allowed, blocked = W.apply_robots(st.frontier, self.host_policy)
         scheduled = W.schedule_per_host(
             allowed, self.host_policy, cfg.order_by(),
             cfg.default_budget, cfg.n_salts,
@@ -476,32 +462,47 @@ class CrawlEngine:
         return st.scheduled, st.cache(blocked)
 
     def _count_batch(self, st: _RoundState, scheduled: DataFrame,
-                     blocked: DataFrame) -> bool:
-        """THE round-planning job. One collect yields the broadcast-gate
-        size, the per-phase row counts (so empty phases skip their whole
-        plan), the robots-blocked count AND the touched host-bucket sets
-        of both frames. Folding all of it into one job matters on real
-        executors, where each driver job barrier costs ~0.3-1 s of RPC
-        fixed cost on short rounds. Returns whether the batch holds
-        discover-labeled rows."""
-        plan_rows = (
+                     blocked: DataFrame,
+                     cohort: DataFrame | None) -> list[tuple] | None:
+        """THE round-planning job: the round's one collect outside the
+        sequencer. It yields the broadcast-gate size, the per-phase row
+        counts (so empty phases skip their whole plan), the
+        robots-blocked and recrawl counts, the touched host-bucket sets
+        of every branch AND the sequencer's range bounds over the
+        discover rows' ``seq`` (the same ``key_sample`` the sequencer's
+        own bound pass aggregates). Folding all of it into one job
+        matters on real executors, where each driver job barrier costs
+        ~0.3-1 s of RPC fixed cost on short rounds. Returns those
+        bounds, or None when the batch holds no discover-labeled
+        rows."""
+        branches = [
             scheduled.select(
                 F.when(_is_parse(), "parse").when(_is_discover(), "discover")
-                .otherwise("none").alias("k"), "host_bucket")
-            .unionByName(
-                blocked.select(F.lit("blocked").alias("k"), "host_bucket"))
+                .otherwise("none").alias("k"), "host_bucket", "seq"),
+            blocked.select(F.lit("blocked").alias("k"), "host_bucket", "seq")]
+        if cohort is not None:
+            branches.append(cohort.select(F.lit("recrawl").alias("k"),
+                                          "host_bucket", "seq"))
+        plan_rows = (
+            reduce(DataFrame.unionByName, branches)
             .groupBy("k")
             .agg(F.count("*").alias("n"),
-                 F.collect_set("host_bucket").alias("bk"))
+                 F.collect_set("host_bucket").alias("bk"),
+                 key_sample([F.col("seq")]).alias("sample"))
             .collect()
         )
         self.last_round_collects += 1
-        n = {row["k"]: row["n"] for row in plan_rows}
+        rows = {row["k"]: row for row in plan_rows}
         for row in plan_rows:
             st.touched |= {int(b) for b in row["bk"]}
+        n = {k: row["n"] for k, row in rows.items()}
         st.counts["robots_blocked"] = n.pop("blocked", 0)
+        st.counts["recrawl_enqueued"] = n.pop("recrawl", 0)
         st.counts["scheduled"] = sum(n.values())
-        return n.get("discover", 0) > 0
+        if "discover" not in rows:
+            return None
+        return pick_bounds(rows["discover"]["sample"],
+                           self.spark.sparkContext.defaultParallelism)
 
     def _fetch(self, st: _RoundState,
                scheduled: DataFrame) -> tuple[DataFrame, ...]:
@@ -528,13 +529,6 @@ class CrawlEngine:
         parse_rows = pages_html.join(bcast(sched_parse), "url", "inner")
         discover_rows = pages_html.join(
             bcast(scheduled.where(_is_discover())), "url", "inner")
-        if self.cfg.capture_plans:
-            jvm = self.spark.sparkContext._jvm
-            self.captured_plans[st.r] = {
-                name: jvm.PythonSQLUtils.explainString(
-                    df._jdf.queryExecution(), "formatted")
-                for name, df in (("fetched", fetched),
-                                 ("parse_rows", parse_rows))}
         return fetched, missing, parse_rows, discover_rows
 
     def _parse(self, st: _RoundState, parse_rows: DataFrame) -> None:
@@ -585,14 +579,18 @@ class CrawlEngine:
         )
 
     def _discover(self, st: _RoundState, discover_rows: DataFrame,
-                  has_discover: bool) -> None:
+                  bounds: list[tuple] | None) -> None:
         """E1: link expansion from discover rows → first-wins → dedup
         against seen (bloom + exact) → global seq. A batch with no
-        discover-labeled rows (the common steady state of two-phase
-        routing) skips the whole plan — several driver jobs of pure
-        fixed cost on provably empty data."""
+        discover-labeled rows (``bounds`` is None — the common steady
+        state of two-phase routing) skips the whole plan — several
+        driver jobs of pure fixed cost on provably empty data.
+        Otherwise the sequencer numbers against the planning collect's
+        bounds over the parents' seqs (a child's ``parent_seq`` is one
+        of them), so it pays one driver job: its per-bucket aggregate,
+        which also yields the links counts and the child buckets."""
         cfg = self.cfg
-        if not has_discover:
+        if bounds is None:
             st.fresh = self.spark.createDataFrame([], st.frontier.schema)
             st.counts["links_discovered"] = st.counts["links_enqueued"] = 0
             return
@@ -610,24 +608,19 @@ class CrawlEngine:
         if cfg.use_bloom:
             st.filters = self.catalog.read("seen_filters",
                                            st.bs["seen_filters"])
-        # cached: the sequencer's planning passes (count / bound
-        # sample / bucket counts) and the final consumers all read the
-        # flag-dedup output — one evaluation of the anti-join chain.
-        # Flag mode keeps EVERY child row (seen rows marked
-        # _fresh=false) so the links-discovered count and the child
-        # bucket set fall out of the sequencer's planning job.
+        # cached: the sequencer's per-bucket aggregate and the final
+        # consumers all read the flag-dedup output — one evaluation of
+        # the anti-join chain. Flag mode keeps EVERY child row (seen
+        # rows marked _fresh=false) so the links-discovered count and
+        # the child bucket set fall out of that aggregate.
         deduped = st.cache(
             D.dedup_against_seen(children, st.seen, st.filters,
                                  flag_col="_fresh").drop("seq"))
-        fresh, plan_stats = assign_global_seq(
-            deduped, ["parent_seq", "pos"], start=st.max_seq + 1,
+        fresh, plan_stats = number_by_bounds(
+            deduped, ["parent_seq", "pos"], bounds, start=st.max_seq + 1,
             gate_col="_fresh", set_col="host_bucket",
         )
-        # the sequencer's internal planning jobs (fused
-        # count+sample+links-stats, per-bucket counts) ARE driver
-        # barriers — count them so _collects is the round's true
-        # job-barrier tally, not just the engine's own collects
-        self.last_round_collects += 2 if plan_stats["n"] else 1
+        self.last_round_collects += 1   # the per-bucket aggregate
         st.counts["links_enqueued"] = plan_stats["n"]
         st.counts["links_discovered"] = plan_stats["n_all"]
         st.child_buckets = {int(b) for b in plan_stats["set"]}
