@@ -18,7 +18,9 @@ Local smoke (synthesizes a corpus when --pages is omitted):
         --warehouse /tmp/crawl-wh
 
 Resume after interruption: rerun with the same --warehouse and no
---seeds; the engine continues from the last complete round's snapshot.
+--seeds or --seed-table; the engine continues from the last complete
+round's snapshot. Seeds for a warehouse that already committed a round
+are an error; --synthesize writes its seed file only for a new one.
 """
 
 from __future__ import annotations
@@ -96,8 +98,10 @@ def main() -> None:
                          CrawlConfig(**kwargs))
 
     seeds_path = args.seeds
-    if args.synthesize and not seeds_path:
-        # smoke mode: seed with the first corpus URLs (discover label)
+    if (args.synthesize and not seeds_path
+            and engine.catalog.last_complete_round() is None):
+        # smoke mode: seed a new warehouse with the first corpus URLs
+        # (discover label); a committed one resumes
         os.makedirs(args.warehouse, exist_ok=True)
         seeds_path = os.path.join(args.warehouse, "seeds.txt")
         with open(seeds_path, "w") as f:

@@ -19,7 +19,8 @@ from pyspark.sql import functions as F
 from web_scrapers_python_spark.oracle import frontier_sim as sim
 from web_scrapers_python_spark.oracle import reference as ref
 from web_scrapers_python_spark.plans.engine import (
-    CrawlConfig, CrawlEngine, merged_seen, read_frontier_full, round_metrics)
+    MAX_RETRIES, CrawlConfig, CrawlEngine, merged_seen, read_frontier_full,
+    round_metrics)
 from web_scrapers_python_spark.sources import datagen as G
 from web_scrapers_python_spark.sources.catalog import SnapshotCatalog
 from web_scrapers_python_spark.sources.seeds import read_seeds
@@ -203,11 +204,13 @@ def test_seen_rotating_compaction_equivalence(spark, pages, policy, seeds_df,
     assert seen_g.count() == seen_g.select("url_hash").distinct().count()
 
 
-def _tear_round(cat, r):
+def _tear_round(cat, r, suffix=""):
     """Leave round ``r`` torn the way a crash inside it would: junk data
-    dirs renamed into place for ``articles`` and ``seen`` under the
-    snapshot ids their next writes pick, but no snapshot metadata file
-    and no ``commit_round``."""
+    dirs for ``articles`` and ``seen`` under the snapshot ids their next
+    writes pick, but no snapshot metadata file and no ``commit_round``.
+    ``suffix=""`` leaves them renamed into place (the crash came after
+    the data dir's rename); ``".tmp"`` leaves them as the tmp dirs a
+    write that dies mid-task leaves behind."""
     base = cat.last_complete_round()["snapshots"]
     for table in ("articles", "seen"):
         snap_id = cat.current_snapshot(table)["id"] + 1
@@ -215,7 +218,7 @@ def _tear_round(cat, r):
             .withColumn("url", F.lit("https://torn.example.com/")) \
             .withColumn("url_hash", F.lit(f"torn-round-{r}")) \
             .write.parquet(os.path.join(cat.warehouse, table,
-                                        f"snap-{snap_id}"))
+                                        f"snap-{snap_id}{suffix}"))
 
 
 class _Crash(RuntimeError):
@@ -258,24 +261,26 @@ _CRASH_TABLES = {"frontier_commit": "frontier",
                  "round0_commit": None}
 
 
-@pytest.mark.parametrize("crash", ["orphaned_dirs", "frontier_commit",
-                                   "archive_commit", "seen_filters_commit",
-                                   "round_commit", "round0_commit"])
+@pytest.mark.parametrize("crash", ["orphaned_dirs", "tmp_dirs",
+                                   "frontier_commit", "archive_commit",
+                                   "seen_filters_commit", "round_commit",
+                                   "round0_commit"])
 def test_resume_from_snapshot_identity(spark, pages, policy, seeds_df,
                                        golden, tmp_path, monkeypatch, crash):
     """Kill after round k-1, and again inside round k — with orphaned
-    data dirs and no round commit, with one table commit failing while
-    the others land (``frontier``; ``frontier_archive`` after the
-    ``frontier`` shard overwrite on the same task; ``seen_filters``
-    after ``seen``, bloom on), or with every table committed but no
-    round commit; resume from the snapshot catalog → final state
-    identical to the uninterrupted run (E5). The filters are only
-    written in a round that discovers links — round 0 on this corpus —
-    so ``seen_filters_commit`` crashes inside round 0, the others
-    inside round 1, except ``round0_commit``: the exact seen check
-    (no bloom) with every round-0 table committed, so the replay
-    must read ``seen`` at the pinned bootstrap snapshot — the current
-    one already holds round 0's children and would dedup them all."""
+    data dirs or half-written tmp data dirs and no round commit, with
+    one table commit failing while the others land (``frontier``;
+    ``frontier_archive`` after the ``frontier`` shard overwrite on the
+    same task; ``seen_filters`` after ``seen``, bloom on), or with
+    every table committed but no round commit; resume from the
+    snapshot catalog → final state identical to the uninterrupted run
+    (E5). The filters are only written in a round that discovers
+    links — round 0 on this corpus — so ``seen_filters_commit``
+    crashes inside round 0, the others inside round 1, except
+    ``round0_commit``: the exact seen check (no bloom) with every
+    round-0 table committed, so the replay must read ``seen`` at the
+    pinned bootstrap snapshot — the current one already holds round
+    0's children and would dedup them all."""
     cfg = CrawlConfig(use_bloom=crash == "seen_filters_commit")
     k = 0 if crash in ("seen_filters_commit", "round0_commit") else 1
     wh = tmp_path / "wh"
@@ -284,6 +289,8 @@ def test_resume_from_snapshot_identity(spark, pages, policy, seeds_df,
     eng.run(seeds_df, max_rounds=k)  # bootstrap + rounds < k, then 'crash'
     if crash == "orphaned_dirs":     # crash inside round k
         _tear_round(cat, k)
+    elif crash == "tmp_dirs":
+        _tear_round(cat, k, ".tmp")
     else:
         failed = _CRASH_TABLES[crash]
         tables = {"frontier", "seen", "articles"} | ({failed} - {None})
@@ -322,6 +329,36 @@ def test_resume_from_snapshot_identity(spark, pages, policy, seeds_df,
         m = round_metrics(cat2, entry)
         assert (m["links_enqueued"], m["articles_scraped"], m["errors"]) \
             == (g["enqueued"], g["articles"], g["errors"]), m
+
+
+def test_run_with_seeds_refuses_committed_warehouse(spark, pages, policy,
+                                                    seeds_df, golden,
+                                                    tmp_path):
+    """Seeds for a warehouse that already committed a round raise
+    instead of bootstrapping it again: the seed round
+    (``_rounds/-1.json``) and every table's current snapshot stay as
+    they were, and ``run(seeds=None)`` then resumes at round 1 to the
+    uninterrupted run's final state."""
+    wh = tmp_path / "wh"
+    cat = SnapshotCatalog(spark, str(wh))
+    CrawlEngine(spark, pages, policy, cat, CrawlConfig()).run(
+        seeds_df, max_rounds=1)
+    seed_round = (wh / "_rounds" / "-1.json").read_bytes()
+    tables = cat.last_complete_round()["snapshots"]
+    before = {t: _snap_id(cat, t) for t in tables}
+
+    cat2 = SnapshotCatalog(spark, str(wh))
+    eng2 = CrawlEngine(spark, pages, policy, cat2, CrawlConfig())
+    with pytest.raises(ValueError, match="round 0"):
+        eng2.run(seeds_df)
+    assert (wh / "_rounds" / "-1.json").read_bytes() == seed_round
+    fresh = SnapshotCatalog(spark, str(wh))
+    assert {t: _snap_id(fresh, t) for t in tables} == before
+
+    metrics = eng2.run(seeds=None, max_rounds=30)
+    assert metrics[0]["round"] == 1
+    assert len(metrics) + 1 == len(golden.rounds)
+    _assert_state_equal(cat2, golden)
 
 
 def test_seen_only_discoveries_keep_filters_id(spark, pages, policy,
@@ -404,7 +441,7 @@ def test_robots_blocking(spark, pages, policy, seeds_df, tmp_path):
 
 
 def test_missing_page_retry_then_fail(spark, policy, tmp_path):
-    """URLs absent from the pages table retry max_retries times then fail
+    """URLs absent from the pages table retry MAX_RETRIES times then fail
     (orchestrator.py:375-405 semantics)."""
     seeds = spark.createDataFrame(
         [("https://host0.example.com/news/present-0", "a", None, 0, 0),
@@ -419,12 +456,12 @@ def test_missing_page_retry_then_fail(spark, policy, tmp_path):
      .withColumn("text", F.lit(None).cast("string")) \
      .withColumn("lang", F.lit("en"))
     cat = SnapshotCatalog(spark, str(tmp_path))
-    eng = CrawlEngine(spark, pages, policy, cat, CrawlConfig(max_retries=3))
+    eng = CrawlEngine(spark, pages, policy, cat, CrawlConfig())
     metrics = eng.run(seeds, max_rounds=10)
     ghost = [r for r in read_frontier_full(cat).collect()
              if "ghost" in r["url"]][0]
     assert ghost["state"] == "failed"
-    assert ghost["retry_count"] == 3
+    assert ghost["retry_count"] == MAX_RETRIES == 3
     assert len(metrics) == 3  # three rounds of retries
 
 

@@ -41,14 +41,16 @@ from ..functions.hashing import KNUTH
 N_PLANES = 20
 BAND_BITS = 5          # join on BAND_BITS-bit bands of the signature
 PROBE_RADIUS = 2       # query-side multi-probe: also join every band code
-                       # within this Hamming distance. Measured on the
-                       # sandbox embeddings (near-random vectors, the
-                       # hardest case for sublinear ANN): recall@5
-                       # 0.46 (12/4/r0) -> 0.94 (20/5/r2) at sf0.1, at
-                       # a candidate fraction of ~0.83 — the honest
-                       # trade on structure-free data; clustered real
-                       # embeddings hit the same recall far cheaper
-                       # (knob curve: tools/ann_sweep.py).
+                       # within this Hamming distance. recall@5 vs the
+                       # exact brute-force top-5 on the sf0.1 test
+                       # embeddings (near-random vectors, the hardest
+                       # case for sublinear ANN): 0.46 (12/4/r0) ->
+                       # 0.94 (20/5/r2), at a candidate fraction of
+                       # ~0.83 — the honest trade on structure-free
+                       # data; clustered real embeddings hit the same
+                       # recall far cheaper. Measured by replaying this
+                       # integer-quantized hash family in numpy over a
+                       # planes/band-bits/radius grid.
 
 
 QUANT = 1 << 20        # vector quantization scale for integer sign bits

@@ -59,7 +59,7 @@ snapshots on a state-partitioned table.
 
 The reference's orchestrator (orchestrator.py:419-497) collapses into
 ``run``'s while-loop; K8s job retries (375-405) become the
-``retry_count < max_retries`` re-queue of failed fetches.
+``retry_count < MAX_RETRIES`` re-queue of failed fetches.
 """
 
 from __future__ import annotations
@@ -89,6 +89,9 @@ FRONTIER_COLS = [
 SEEN_COLS = ["url_hash", "url", "host_bucket", "first_round",
              "last_round", "scrape_count", "last_scrape_round",
              "last_dup_round", "last_fail_round", "status"]
+
+# fetch attempts before a URL turns "failed" (orchestrator.py:64)
+MAX_RETRIES = 3
 
 def merged_seen(events: DataFrame) -> DataFrame:
     """Latest-state view over the seen event log — exactly the
@@ -219,8 +222,6 @@ class CrawlConfig:
                                    # incremental filter merge (10^10
                                    # design point: ~2e7 per bucket)
     rediscover: bool = False     # False = reference two-phase routing
-    max_retries: int = 3         # orchestrator.py:64
-    max_rounds: int = 100
     # J4 physical strategy: broadcast the scheduled batch into the pages
     # join only while it is provably SMALL. Beyond the threshold the
     # hint is dropped and AQE picks the join from runtime stats (on a
@@ -649,7 +650,7 @@ class CrawlEngine:
         'failed', cassandra_manager.py:151); the seen write adds one
         duplicate event per re-store whose content hash matched. O(round
         delta) rows — the full seen table is never rewritten."""
-        r, cfg = st.r, self.cfg
+        r = st.r
         fr_touched = st.frontier.where(
             F.col("host_bucket").isin(sorted(st.touched)))
         transitions = (
@@ -669,7 +670,7 @@ class CrawlEngine:
                 "state",
                 F.when(F.col("_new").isNull(), F.col("state"))
                 .when((F.col("_new") == "fetch_failed")
-                      & (F.col("retry_count") < cfg.max_retries), "pending")
+                      & (F.col("retry_count") < MAX_RETRIES), "pending")
                 .when(F.col("_new") == "fetch_failed", "failed")
                 .otherwise(F.col("_new")),
             )
@@ -871,17 +872,23 @@ class CrawlEngine:
 
     # -- loop -------------------------------------------------------------------
     def run(self, seeds: DataFrame | None = None,
-            max_rounds: int | None = None) -> list[dict]:
-        """E3: bootstrap (unless resuming) then rounds until the frontier
-        drains. Resume = continue from the last complete round's
-        snapshots — no recomputation, identical final state."""
-        if seeds is not None:
-            self.bootstrap(seeds)
+            max_rounds: int = 100) -> list[dict]:
+        """E3: bootstrap then rounds until the frontier drains. With
+        ``seeds=None`` it resumes: continue from the last complete
+        round's snapshots — no recomputation, identical final state.
+        Seeds for a warehouse that already committed a round (the
+        bootstrap is round -1) raise ``ValueError``: bootstrapping
+        again would replace its seed round under committed rounds."""
         last = self.catalog.last_complete_round()
+        if seeds is not None:
+            if last is not None:
+                raise ValueError(
+                    f"warehouse {self.catalog.warehouse} already committed "
+                    f"round {last['round']}; resume with seeds=None")
+            self.bootstrap(seeds)
         start = (last["round"] + 1) if last else 0
         out = []
-        limit = max_rounds if max_rounds is not None else self.cfg.max_rounds
-        for r in range(start, start + limit):
+        for r in range(start, start + max_rounds):
             m = self.run_round(r)
             out.append(m)
             # refresh crawls (recrawl_ttl) idle between cohorts: future

@@ -258,23 +258,6 @@ def generate_pages(spark, n: int, n_hosts: int = 64, seed: int = 42,
     return spark.range(0, n, numPartitions=parts).mapInPandas(gen, PAGES_SCHEMA)
 
 
-def seeds_text(seed: int, n: int, n_hosts: int, n_seeds: int = 8) -> str:
-    """Mixed-format seeds file content (FIXTURES.md §2): comment, blank,
-    bare URLs, strict-JSON lines, a lenient line, one invalid line."""
-    urls = [url_of(seed, i, n_hosts) for i in range(n_seeds)]
-    lines = ["# fixture seeds", ""]
-    for k, u in enumerate(urls):
-        if k % 3 == 2:
-            lines.append(
-                '{"url": "%s", "label": "a", "parser": "generic-news"}' % u
-            )
-        else:
-            lines.append(u)
-    lines.append("{url: 'relative.example/x', label: 'a'}")  # lenient, schemeless
-    lines.append("not-a-url-no-scheme")                       # dropped
-    return "\n".join(lines) + "\n"
-
-
 def host_policy_rows(seed: int, n_hosts: int) -> list[dict]:
     """FIXTURES.md §4 — per-host politeness budgets + robots rules
     (net-new per north rule; reference analog is global max_concurrency=2,
